@@ -1,84 +1,55 @@
 package graft
 
-/** Benchmark entry point. Emits the three-line JSON report (full per-query
-  * maps with median AND min, then a compact rotating-quarter map, then a
-  * compact summary that fits the driver's 2000-char tail capture and parses
-  * as the "last stdout line") after EVERY completed warm pass, and once more
-  * after `spark.stop()` as the final words of the program. Early emission is
-  * the round-18 protocol fix: round 17's graded capture hit the driver's
-  * time budget (rc 124) with the three lines still unprinted — under
-  * last-complete-report-wins, a capture that loses its final pass mid-flight
-  * still carries the report of every pass that DID complete. All emissions
-  * go through the same pure [[Bench.buildReport]], so the interim and final
-  * JSON are identical by construction (spec-pinned in `BenchReportSpec`).
-  * Failures are never silently folded into timings: a failed query reports
-  * `-1` in `queries` and its message in `errors` (stack traces to stderr).
+import graft.queries.PipelineQueries
+import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
+/** Benchmark entry point: every `SparkEntry.queries` entry at
+  * `SPARK_GRAFT_SF_DIR`, timed to `count()`. Emits a two-line JSON report
+  * (the full per-query maps with median AND min, then the summary line
+  * whose scalars sit last) after EVERY completed warm pass, and once more
+  * after `spark.stop()` as the final words of the program: a reader of
+  * stdout takes the last report printed, so a run cut short mid-pass still
+  * carries every pass that completed. All emissions go through the pure
+  * [[Bench.buildReport]], so the interim and final JSON are identical for
+  * identical state (`BenchReportSpec`). Failures are never folded into
+  * timings: a failed query reports `-1` in `queries` and its message in
+  * `errors` (stack traces to stderr).
   *
-  * A WALL-CLOCK DEADLINE bounds the whole capture
-  * (`SPARK_GRAFT_BENCH_DEADLINE_SEC`, default 2400s — comfortably inside
-  * the driver's budget, which ate the unbounded round-17 run): before
-  * scheduling another pass or load-gate retry, the loop requires
-  * elapsed + min-observed-pass-wall-time to stay under the deadline, else
-  * it finalizes with the passes in hand (one completed warm pass is a
-  * valid capture; `deadline_hit` in the tail line records the early stop).
-  * The load gate likewise only DISCARDS a contended pass when the deadline
-  * leaves room to run its replacement — otherwise the contended pass is
-  * kept (a noisy number beats a lost one; the per-pass loads in the tail
-  * expose it either way).
+  * A cold pass runs every query once (JVM/codegen warm-up), then
+  * [[WarmPasses]] timed warm passes; the report carries the per-query
+  * MEDIAN and MIN. The min is the contention-immune statistic for a
+  * deterministic workload: a noisy window can only raise a pass's time, so
+  * a single clean pass sets it. Each warm pass visits the queries in an
+  * order rotated by 1/WarmPasses of the surface, so a noisy window lands
+  * on different queries in different passes.
   *
-  * Timings are STEADY-STATE and CONTENTION-RESISTANT: a full cold pass
-  * runs every query once (absorbing JVM/Janino warmup — whole-stage-
-  * codegen compilation of the wide-aggregate plans costs seconds at any
-  * data size and amortizes to nothing at real scale), then FIVE timed
-  * warm passes (SPARK_GRAFT_BENCH_PASSES overrides) re-execute each
-  * query and the report carries BOTH the per-query MEDIAN (comparable
-  * to prior rounds) and the per-query MIN.
-  * The min is the contention-immune statistic for a deterministic
-  * workload: this shared machine swings whole captures ±25–50% and single
-  * runs up to 10× on identical code (adjudicated rounds 8–9 — the
-  * phantom q143 "regression" re-timed at 1/10th of its captured median),
-  * and while one noisy minute can inflate a median it can only ever
-  * RAISE a min's competitors, never the min itself once any single pass
-  * ran clean. Passes are additionally INTERLEAVED: each warm pass visits
-  * the queries in an order rotated by 1/WarmPasses of the surface, so a
-  * noisy window lands on different queries in different passes instead of
-  * hitting the same query at the same relative time every pass. The
-  * tail line records the per-pass totals, per-pass load averages and
-  * the capture's epoch window, so the judge can read the contention
-  * envelope off the artifact itself (the round-16 protocol fix: two
-  * rounds of graded captures landed 15–17% above same-code mid-round
-  * windows and the adjudication needed builder-side numbers).
-  * Persisted pipeline stages are dropped between passes and then
-  * re-materialized as their OWN timed phase (`stage_build_sec` /
-  * `stage_build_min_sec`) before the queries are timed — so per-query
-  * numbers are pure marginal costs with stages warm, and the totals
-  * reconcile exactly: value = stage_build_sec + Σ median marginals,
-  * min_total_sec = stage_build_min_sec + Σ min marginals (the round-10
-  * double-discount of shared stage builds is gone). The stage clock
-  * starts BEFORE plan registration (constructors are not action-free —
-  * eager Lloyd/checkpoint loops run real jobs during construction, and
-  * that work belongs to the stage phase, not to nothing), and the phase
-  * is additionally attributed PER STAGE (`stage_sec`/`stage_min_sec`,
-  * with `stage_consumers` counting cache-riding consumers): stages are
-  * forced in registration order, which is topological, so each stage's
-  * number is its own build with dependencies already warm. The iterative
-  * operators' localCheckpoint blocks are freed by the ContextCleaner
-  * only after GC, so one System.gc() runs between passes (the round-8
-  * diffuse-regression fix).
+  * Persisted pipeline stages are dropped before every pass and rebuilt as
+  * their own timed phase ([[stagePhase]]), so per-query numbers are
+  * marginal costs with stages warm and the totals reconcile exactly:
+  * value = stage_build_sec + Σ median marginals, min_total_sec =
+  * stage_build_min_sec + Σ min marginals.
+  *
+  * A pass whose end-of-pass 1-min load average exceeds [[LoadGate]] ran in
+  * a contended window: it is discarded and re-run, at most [[MaxRetries]]
+  * times so a permanently loaded host still terminates. [[DeadlineSec]]
+  * bounds the whole run: before another pass or retry, elapsed + the
+  * fastest observed pass must fit, else the run finalizes with the passes
+  * in hand (`deadline_hit`; one completed warm pass is a valid report). A
+  * contended pass is kept when the deadline leaves no room to replace it —
+  * a noisy number beats a lost one, and `pass_load` exposes it.
   */
 object Bench {
 
-  /** Warm passes: 5 by default (round-16 protocol — two rounds running,
-    * the graded final-window capture landed 15–17% above the builder's
-    * same-code mid-round captures and adjudication depended on
-    * builder-recorded side numbers; five rotated passes give the min
-    * five independent chances to land inside a clean minute, and the
-    * per-pass totals + load averages recorded in the tail line let the
-    * judge see the contention envelope in the artifact itself).
-    * SPARK_GRAFT_BENCH_PASSES overrides for quick local iterations. */
-  private val WarmPasses =
-    sys.env.get("SPARK_GRAFT_BENCH_PASSES").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(5)
+  private val WarmPasses = 5
+  /** Above the bench's own steady-state load (clean windows measured
+    * 1.6–3.3) and below the contended runs it exists to shed (4.4+). */
+  private val LoadGate = 4.0
+  private val MaxRetries = 2
+  private val DeadlineSec = 2400.0
 
   /** Median of the non-negative (successful) observations; -1 if none. */
   private def median(xs: Seq[Double]): Double = {
@@ -89,41 +60,64 @@ object Bench {
   }
 
   /** Fastest successful observation; -1 if none. */
-  private def minOk(xs: Seq[Double]): Double = {
+  private[graft] def minOk(xs: Seq[Double]): Double = {
     val ok = xs.filter(_ >= 0)
     if (ok.isEmpty) -1.0 else ok.min
   }
 
-  /** Numeric query id — safe parse (q-prefix digits); unparseable names
-    * sort last instead of throwing away the whole capture. */
-  private def qNum(name: String): Int =
-    name.drop(1).takeWhile(_.isDigit).toIntOption.getOrElse(Int.MaxValue)
+  /** A JSON number rounded to `scale` decimals (the report's precision). */
+  private[graft] def num(v: Double, scale: Int): JValue =
+    JDecimal(BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP))
 
-  /** Which quarter of the surface this round's compact line carries:
-    * env override SPARK_GRAFT_BENCH_BAND (legacy _THIRD still honored),
-    * else (#existing BENCH_r*.json in cwd + 1) mod 4 — self-rotating as
-    * the driver archives a bench per round, deterministic (no clock, no
-    * RNG). (Was thirds through round 13's 227-query surface; at 235
-    * queries lines 2+3 measured 2051 chars and the driver's 2000-char
-    * tail clipped line 2's head, so the band width dropped to a
-    * quarter — full history every FOUR rounds, ~200 chars of headroom
-    * restored.) */
-  private def bandOfRound(): Int =
-    sys.env.get("SPARK_GRAFT_BENCH_BAND")
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_THIRD"))
-      .flatMap(_.toIntOption)
-      .getOrElse {
-        val benches = Option(new java.io.File(".").listFiles())
-          .getOrElse(Array.empty)
-          .count(_.getName.matches("BENCH_r\\d+\\.json"))
-        (benches + 1) % 4
-      } % 4
+  /** Drops every persisted stage, then collects garbage: the iterative
+    * operators' localCheckpoint blocks are freed by the ContextCleaner
+    * only after GC. */
+  def dropStages(): Unit = {
+    PipelineQueries.clearStages()
+    System.gc()
+  }
 
-  /** Everything the three report lines are computed from — a snapshot of
-    * the capture's mutable state, taken after each completed warm pass and
-    * once more at the very end. Keeping the report a pure function of this
-    * state is what makes the interim (per-pass) and final emissions
-    * byte-identical when the state hasn't changed (`BenchReportSpec`). */
+  /** The stage phase: drop all stages, construct `queries` (which
+    * registers the stages they ride) and force each registered stage
+    * under its own clock, in registration order — which is topological, so
+    * a stage's time is its own build with its dependencies already warm.
+    * The phase clock starts BEFORE construction because constructors are
+    * not action-free (eager Lloyd/checkpoint loops run jobs). Returns the
+    * phase seconds, the per-stage seconds, and the queries that registered
+    * at least one stage. */
+  def stagePhase(spark: SparkSession, dir: String, queries: Seq[String])
+      : (Double, Seq[(String, Double)], Seq[String]) = {
+    dropStages()
+    val t0 = System.nanoTime()
+    val registrants = queries.filter { n =>
+      val before = PipelineQueries.stages.size
+      try SparkEntry.queries(n)(spark, dir)
+      catch { case _: Throwable => () }
+      PipelineQueries.stages.size > before
+    }
+    val perStage = PipelineQueries.materializeStagesTimed()
+    ((System.nanoTime() - t0) / 1e9, perStage, registrants)
+  }
+
+  /** One timed visit: construct `name` at `dir` and `count()` it, with
+    * construction under the clock. Returns (rows, seconds); a failure goes
+    * to stderr with its stack trace and comes back as Left. */
+  def timeCount(spark: SparkSession, dir: String, name: String)
+      : Either[Throwable, (Long, Double)] = {
+    val t0 = System.nanoTime()
+    try {
+      val rows = SparkEntry.queries(name)(spark, dir).count()
+      Right((rows, (System.nanoTime() - t0) / 1e9))
+    } catch { case e: Throwable =>
+      System.err.println(s"[graft] $name @ $dir failed:")
+      e.printStackTrace(System.err)
+      Left(e)
+    }
+  }
+
+  /** Everything the report is computed from — a snapshot of the run's
+    * mutable state, taken after each completed warm pass and once more at
+    * the very end. */
   final case class BenchState(
       names: Seq[String],
       passes: Seq[Map[String, Double]],
@@ -135,142 +129,80 @@ object Bench {
       retriedSecs: Seq[Double],
       retriedLoads: Seq[Double],
       coldTotal: Double,
-      warmPasses: Int,
-      loadGate: Double,
-      deadlineSec: Double,
       deadlineHit: Boolean,
       sfDir: String,
       startEpoch: Long,
-      endEpoch: Long,
-      bandIdx: Int)
+      endEpoch: Long)
 
-  /** Build the three JSON report lines from a state snapshot. Pure —
-    * no clock, no env, no filesystem — so emitting after every pass and
-    * once more after `spark.stop()` yields identical lines for identical
-    * state, and a spec can pin that without running Spark. */
-  def buildReport(s: BenchState): (String, String, String) = {
+  /** Build the two JSON report lines from a state snapshot. Pure — no
+    * clock, no env, no filesystem — so a spec can pin it without Spark. */
+  def buildReport(s: BenchState): (String, String) = {
     val names = s.names
-    // per-pass totals (stage phase + that pass's query marginals) — the
-    // reconciling per-pass view of the same numbers min/median compress
+    // per-pass totals (stage phase + that pass's query marginals)
     val passTotals = s.passes.zipWithIndex.map { case (m, i) =>
       s.stageSecs(i) + m.values.filter(_ >= 0).sum
     }
     val med = names.map(n => n -> median(s.passes.map(_(n))))
     val mins = names.map(n => n -> minOk(s.passes.map(_(n)))).toMap
-    def jmap(entries: Seq[(String, Double)], fmt: Double => String) =
-      entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-    val qs = jmap(med, v => f"$v%.3f")
-    val qsMin = jmap(med.map { case (k, _) => k -> mins(k) }, v => f"$v%.3f")
-    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
+    def obj(kvs: Seq[(String, JValue)]) = JObject(kvs.toList)
+    def arr(xs: Seq[Double], scale: Int) = JArray(xs.map(num(_, scale)).toList)
+    def consumers(k: String) = JInt(BigInt(s.consumers.getOrElse(k, 0L)))
     // A query that failed one pass but has a positive median recovered — its
     // timing is real; only persistent failures (median -1) surface as errors,
     // so the JSON never reports an error and a success for the same query.
-    // Transient failures still leave their stack trace on stderr.
     val persistent = med.collect { case (n, v) if v < 0 => n }.toSet
-    val errJson = s.errors.collect {
-      case (k, v) if persistent(k) => "\"" + k + "\":\"" + esc(v) + "\""
-    }.mkString("{", ",", "}")
-    // fleet totals INCLUDE the stage phase: total = stage build (median /
-    // min across passes) + the query marginals, so the two totals
-    // reconcile with the per-query maps plus stage_build_* exactly
+    val errors = obj(s.errors.collect {
+      case (k, v) if persistent(k) => k -> JString(v)
+    })
     val stageMed = median(s.stageSecs)
     val stageMin = minOk(s.stageSecs)
-    // per-stage attribution: median/min of each stage's own build time
-    // across passes, in topological (registration) order; the gap
-    // between stage_build_sec and the per-stage sum is plan
-    // construction + the eager stage-registering constructors (also
-    // under the stage clock)
+    // per-stage median/min across passes, in registration order; the gap
+    // between stage_build_sec and the per-stage sum is the construction
+    // of the stage-registering queries
     val stageKeys = s.stagePass.headOption.map(_.map(_._1)).getOrElse(Seq())
     val byStage = stageKeys.map { k =>
       val xs = s.stagePass.map(_.toMap.getOrElse(k, -1.0))
       (k, median(xs), minOk(xs))
     }
-    val stageMap = byStage.map { case (k, m, _) => k -> m }
-    val stageConsJson = stageKeys
-      .map(k => "\"" + k + "\":" + s.consumers.getOrElse(k, 0L))
-      .mkString("{", ",", "}")
     val total = med.collect { case (_, v) if v >= 0 => v }.sum + stageMed
     val minTotal = mins.values.filter(_ >= 0).sum + stageMin
-    // Field order matters: the driver's capture can truncate this line from
-    // the FRONT, keeping only the tail. The big maps therefore go first and
-    // every small summary scalar goes LAST, so even a heavily truncated
-    // capture still carries the totals.
-    val line = s"""{"queries":$qs,"queries_min":$qsMin,"errors":$errJson,"stage_sec":${jmap(stageMap, v => f"$v%.3f")},"stage_min_sec":${jmap(byStage.map { case (k, _, mn) => k -> mn }, v => f"$v%.3f")},"stage_consumers":$stageConsJson,"warm_passes":${s.warmPasses},"sf":"${s.sfDir}","cold_total_sec":${f"${s.coldTotal}%.3f"},"stage_build_sec":${f"$stageMed%.3f"},"stage_build_min_sec":${f"$stageMin%.3f"},"min_total_sec":${f"$minTotal%.3f"},"metric":"total","unit":"sec","value":$total}"""
-    // The driver keeps only the LAST 2000 chars of stdout, so the full map
-    // can never fit the capture. Line 2 carries ONE QUARTER of the
-    // surface (by numeric id order, rotating with the round via the
-    // BENCH_r*.json count), so full per-query history exists every four
-    // rounds inside the tail window. Values are per-query MINs (the
-    // contention-immune statistic); keys are the qNN prefix unless that
-    // collides, then the full name.
-    val byNum = names.sortBy(n => (qNum(n), n))
-    val chunk = (byNum.length + 3) / 4
-    val band = byNum.slice(s.bandIdx * chunk, (s.bandIdx + 1) * chunk)
-    val prefixCounts = names.groupBy(_.takeWhile(_ != '_')).map {
-      case (p, g) => p -> g.length
-    }
-    def shortKey(n: String) = {
-      val p = n.takeWhile(_ != '_')
-      if (prefixCounts.getOrElse(p, 2) == 1) p else n
-    }
-    val bandJson = band.map { n =>
-      "\"" + shortKey(n) + "\":" + f"${mins(n)}%.2f"
-    }.mkString("{", ",", "}")
-    // The per-stage map gets the SAME rotating-quarter treatment (the
-    // round-12 lesson: line 1's full stage_sec map is truncated away by
-    // the driver's tail capture, and line 3's top-5 hid doc_features —
-    // 16.5s locally — behind the cutoff). One quarter of the per-stage
-    // MINs per round, alphabetical order, so full per-stage history
-    // survives the 2000-char window every four rounds.
-    val stageSorted = byStage.sortBy(_._1)
-    val sChunk = (stageSorted.length + 3) / 4
-    val sBand = stageSorted.slice(s.bandIdx * sChunk, (s.bandIdx + 1) * sChunk)
-    val stageBandJson = sBand.map { case (k, _, mn) =>
-      "\"" + k + "\":" + f"$mn%.2f"
-    }.mkString("{", ",", "}")
-    // band_den marks the rotation WIDTH (absent = thirds era, 4 =
-    // quarters) independently of the key NAMES: archived BENCH_r*.json
-    // through r12 have no band_den and "third"/"stage_min_third" keys,
-    // r13 has band_den:4 but still the old key names, r14+ has
-    // band_den:4 with "band"/"stage_min_band" — a reassembling consumer
-    // should width by band_den and accept either key spelling
-    val line2 =
-      s"""{"band":${s.bandIdx},"band_den":4,"min_q":$bandJson,"stage_min_band":$stageBandJson}"""
-    // Line 3 (the driver's parsed "last line"): top-10 slowest by median
-    // (was top-20 — trimmed to keep lines 2+3 inside the driver's
-    // 2000-char tail once line 2 carries the rotating stage band; at the
-    // 240-query round-14 surface the two lines measured 1801 chars, and
-    // at the 250/253-query round-15 surface 1755 / 1038-1062 chars
-    // depending on the band's stage slice — re-measure after any
-    // surface growth),
-    // each as [min, median] so the contention-immune number rides along,
-    // the top-5 most expensive STAGES (as [min, median, consumers] — the
-    // stage-graph audit's headline), plus every summary scalar.
+    // both lines end with the same summary scalars, so each parses alone
+    // with the totals at its tail
+    val summary = ("warm_passes" -> WarmPasses) ~ ("sf" -> s.sfDir)
+    val totals = ("cold_total_sec" -> num(s.coldTotal, 3)) ~
+      ("stage_build_sec" -> num(stageMed, 3)) ~
+      ("stage_build_min_sec" -> num(stageMin, 3)) ~
+      ("min_total_sec" -> num(minTotal, 3)) ~
+      ("metric" -> "total") ~ ("unit" -> "sec") ~ ("value" -> total)
+    val line1 =
+      ("queries" -> obj(med.map { case (k, v) => k -> num(v, 3) })) ~
+        ("queries_min" -> obj(med.map { case (k, _) => k -> num(mins(k), 3) })) ~
+        ("errors" -> errors) ~
+        ("stage_sec" -> obj(byStage.map { case (k, m, _) => k -> num(m, 3) })) ~
+        ("stage_min_sec" -> obj(byStage.map { case (k, _, mn) => k -> num(mn, 3) })) ~
+        ("stage_consumers" ->
+          obj(stageKeys.map(k => k -> consumers(k)))) ~
+        summary ~ totals
+    // line 2: the 10 slowest queries by median as [min, median], the 5 most
+    // expensive stages as [min, median, consumers], the per-pass totals
+    // and loads (did the min come from a clean pass?), the discarded
+    // passes, the deadline state and the run's epoch window
     val slowest = med.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":[" + f"${mins(k)}%.2f" + "," + f"$v%.2f" + "]" }
-      .mkString("{", ",", "}")
-    val slowStages = byStage.sortBy(-_._2).take(5)
-      .map { case (k, m, mn) =>
-        "\"" + k + "\":[" + f"$mn%.2f" + "," + f"$m%.2f" + "," +
-          s.consumers.getOrElse(k, 0L) + "]"
-      }.mkString("{", ",", "}")
-    // contention-envelope fields (round-16): the per-pass totals show
-    // whether the min came from a clean pass or every window was noisy;
-    // pass_load is the 1-min OS load average at each pass's end; win is
-    // the capture's [start, end] epoch-seconds window; passes_done +
-    // deadline_hit (round-18) say whether the capture finished its full
-    // schedule or finalized early with the passes in hand
-    val passSecJson =
-      passTotals.map(v => f"$v%.1f").mkString("[", ",", "]")
-    val passLoadJson =
-      s.passLoads.map(v => f"$v%.1f").mkString("[", ",", "]")
-    val retrySecJson =
-      s.retriedSecs.map(v => f"$v%.1f").mkString("[", ",", "]")
-    val retryLoadJson =
-      s.retriedLoads.map(v => f"$v%.1f").mkString("[", ",", "]")
-    val line3 = s"""{"slowest":$slowest,"slowest_stages":$slowStages,"errors":$errJson,"pass_sec":$passSecJson,"pass_load":$passLoadJson,"retried_sec":$retrySecJson,"retried_load":$retryLoadJson,"load_gate":${s.loadGate},"passes_done":${s.passes.length},"deadline_sec":${f"${s.deadlineSec}%.0f"},"deadline_hit":${s.deadlineHit},"win":[${s.startEpoch},${s.endEpoch}],"warm_passes":${s.warmPasses},"sf":"${s.sfDir}","n_queries":${names.size},"cold_total_sec":${f"${s.coldTotal}%.3f"},"stage_build_sec":${f"$stageMed%.3f"},"stage_build_min_sec":${f"$stageMin%.3f"},"min_total_sec":${f"$minTotal%.3f"},"metric":"total","unit":"sec","value":$total}"""
-    (line, line2, line3)
+      .map { case (k, v) => k -> arr(Seq(mins(k), v), 2) }
+    val slowStages = byStage.sortBy(-_._2).take(5).map { case (k, m, mn) =>
+      k -> JArray(List(num(mn, 2), num(m, 2), consumers(k)))
+    }
+    val line2 = ("slowest" -> obj(slowest)) ~
+      ("slowest_stages" -> obj(slowStages)) ~ ("errors" -> errors) ~
+      ("pass_sec" -> arr(passTotals, 1)) ~ ("pass_load" -> arr(s.passLoads, 1)) ~
+      ("retried_sec" -> arr(s.retriedSecs, 1)) ~
+      ("retried_load" -> arr(s.retriedLoads, 1)) ~
+      ("load_gate" -> LoadGate) ~ ("passes_done" -> s.passes.length) ~
+      ("deadline_sec" -> num(DeadlineSec, 0)) ~
+      ("deadline_hit" -> s.deadlineHit) ~
+      ("win" -> List(s.startEpoch, s.endEpoch)) ~
+      summary ~ ("n_queries" -> names.size) ~ totals
+    (compact(render(line1)), compact(render(line2)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -281,197 +213,105 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val tCold = System.nanoTime()
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] cold pass $name failed: $e")
-      }
-    }
+    names.foreach(timeCount(spark, sfDir, _))
     val coldTotal = (System.nanoTime() - tCold) / 1e9
 
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Shared stage builds are priced as their OWN timed phase per pass
-    // (round-10 finding: with stage builds inside query timings, a
-    // query's min under rotation is its marginal cost while its median
-    // mixes in stage builds, so min_total double-discounts the shared
-    // work). Per pass: clear caches, start the stage clock, register
-    // every stage by constructing the stage-registering query plans
-    // (construction is NOT action-free — eager constructors like the
-    // Lloyd localCheckpoint loops run real jobs — so the clock starts
-    // BEFORE registration and that work is priced in the stage phase),
-    // materialize each registered stage individually (per-stage
-    // attribution: registration order is topological, so a stage's
-    // timing is its own build, dependencies already warm), then time
-    // queries with stages warm — per-query numbers are pure marginals,
-    // and total == stage_build + Σ marginals reconciles by construction.
-    // Pass 0 constructs ALL plans and records which queries register
-    // stages; later passes re-construct only those registrants, so
-    // eager non-stage constructors run exactly once per timed visit
-    // instead of once extra per pass.
-    val stageSecs = scala.collection.mutable.Buffer.empty[Double]
-    // per-pass contention telemetry (round-16 protocol): each warm
-    // pass's own wall-clock total and the OS 1-minute load average
-    // sampled at its end — the tail line carries both arrays plus the
-    // capture's epoch window, so a contended pass is visible IN the
-    // artifact instead of needing a builder-recorded side capture
-    val passLoads = scala.collection.mutable.Buffer.empty[Double]
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    val stageSecs = mutable.Buffer.empty[Double]
+    val passLoads = mutable.Buffer.empty[Double]
     val benchStartEpoch = System.currentTimeMillis() / 1000L
-    val stagePass =
-      scala.collection.mutable.Buffer.empty[Seq[(String, Double)]]
-    val registrants = scala.collection.mutable.LinkedHashSet.empty[String]
+    val stagePass = mutable.Buffer.empty[Seq[(String, Double)]]
+    // The first executed pass constructs ALL plans and records which
+    // queries register stages; later passes re-construct only those, so
+    // eager non-stage constructors run once per timed visit, not once
+    // extra per pass.
+    var registrants = Option.empty[Seq[String]]
     var consumers = Map.empty[String, Long]
-    // LOAD GATE (round-17, acting on the round-16 telemetry): a pass
-    // whose end-of-pass 1-min load average exceeds the gate was run in
-    // a contended window — discard it and run a replacement, up to
-    // `maxRetries` total (bounded so a permanently-loaded host still
-    // terminates). Discarded passes are recorded in the tail line
-    // (retried_sec/retried_load) so the artifact shows what was shed.
-    // The default gate sits above the bench's own steady-state load
-    // (clean windows measured 1.6–3.3 at the 270-query surface) and
-    // below the contended captures (4.4+) it exists to shed. Malformed
-    // env values fall back to the defaults (same pattern as
-    // BENCH_PASSES) instead of killing the capture.
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE")
-      .flatMap(_.toDoubleOption).filter(_ > 0).getOrElse(4.0)
-    val maxRetries = sys.env.get("SPARK_GRAFT_LOAD_RETRIES")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(2)
-    // WALL-CLOCK DEADLINE (round-18, the r17 rc-124 fix): the load
-    // gate's retry loop made the worst case 1 cold + WarmPasses +
-    // maxRetries full passes with nothing bounding total wall time, and
-    // the driver's budget ate the whole capture. Before scheduling
-    // another pass (or a retry), elapsed + the fastest observed full
-    // pass must stay inside the deadline, else finalize with the passes
-    // in hand. 2400s default: r16's clean 270-query capture ran ~1680s
-    // end to end, so a full 5-pass schedule fits with ~2 retries' worth
-    // of headroom shed, and the capture lands well inside the driver
-    // budget that killed r17.
-    val deadlineSec = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_SEC")
-      .flatMap(_.toDoubleOption).filter(_ > 0).getOrElse(2400.0)
     // wall time of every EXECUTED pass, kept or discarded — its min is
     // the estimate for "can one more pass fit before the deadline"
-    val passWalls = scala.collection.mutable.Buffer.empty[Double]
+    val passWalls = mutable.Buffer.empty[Double]
     def passEstimate =
       if (passWalls.isEmpty) coldTotal else passWalls.min
     var deadlineHit = false
-    val retriedSecs = scala.collection.mutable.Buffer.empty[Double]
-    val retriedLoads = scala.collection.mutable.Buffer.empty[Double]
-    var retriesUsed = 0
-    var firstExec = true
-    val passesBuf =
-      scala.collection.mutable.Buffer.empty[Map[String, Double]]
-    def snapshot() = BenchState(
-      names = names,
-      passes = passesBuf.toSeq,
-      stageSecs = stageSecs.toSeq,
-      stagePass = stagePass.toSeq,
-      consumers = consumers,
-      errors = errors.toSeq,
-      passLoads = passLoads.toSeq,
-      retriedSecs = retriedSecs.toSeq,
-      retriedLoads = retriedLoads.toSeq,
-      coldTotal = coldTotal,
-      warmPasses = WarmPasses,
-      loadGate = loadGate,
-      deadlineSec = deadlineSec,
-      deadlineHit = deadlineHit,
-      sfDir = sfDir,
-      startEpoch = benchStartEpoch,
-      endEpoch = System.currentTimeMillis() / 1000L,
-      bandIdx = bandOfRound())
+    val retriedSecs = mutable.Buffer.empty[Double]
+    val retriedLoads = mutable.Buffer.empty[Double]
+    val passesBuf = mutable.Buffer.empty[Map[String, Double]]
     def emitReport(): Unit = {
-      val (l1, l2, l3) = buildReport(snapshot())
-      println(l1); println(l2); println(l3)
+      val (l1, l2) = buildReport(BenchState(
+        names = names,
+        passes = passesBuf.toSeq,
+        stageSecs = stageSecs.toSeq,
+        stagePass = stagePass.toSeq,
+        consumers = consumers,
+        errors = errors.toSeq,
+        passLoads = passLoads.toSeq,
+        retriedSecs = retriedSecs.toSeq,
+        retriedLoads = retriedLoads.toSeq,
+        coldTotal = coldTotal,
+        deadlineHit = deadlineHit,
+        sfDir = sfDir,
+        startEpoch = benchStartEpoch,
+        endEpoch = System.currentTimeMillis() / 1000L))
+      println(l1); println(l2)
       System.out.flush()
     }
     while (passesBuf.length < WarmPasses && !deadlineHit) {
-      // deadline check BEFORE each pass (kept or retry); the first pass
-      // always runs — one completed warm pass is the minimum valid capture
-      if (passesBuf.nonEmpty && elapsedSec + passEstimate > deadlineSec) {
+      // the first pass always runs — one completed warm pass is the
+      // minimum valid report
+      if (passesBuf.nonEmpty && elapsedSec + passEstimate > DeadlineSec) {
         deadlineHit = true
         System.err.println(
           f"[bench] deadline: elapsed $elapsedSec%.0fs + est " +
-            f"$passEstimate%.0fs > $deadlineSec%.0fs — finalizing with " +
+            f"$passEstimate%.0fs > $DeadlineSec%.0fs — finalizing with " +
             s"${passesBuf.length} passes")
       } else {
         val pass = passesBuf.length
-        graft.queries.PipelineQueries.clearStages()
-        System.gc()
-        val tS = System.nanoTime()
-        // registration bookkeeping runs on the first EXECUTED pass
-        // (timing-independent, so a discarded first pass still counts)
-        val toRegister = if (firstExec) names else registrants.toSeq
-        toRegister.foreach { n =>
-          val before = graft.queries.PipelineQueries.stages.size
-          try { SparkEntry.queries(n)(spark, sfDir); () }
-          catch { case _: Throwable => () }
-          if (firstExec && graft.queries.PipelineQueries.stages.size > before)
-            registrants += n
-        }
-        val perStage = graft.queries.PipelineQueries.materializeStagesTimed()
-        val stageSec = (System.nanoTime() - tS) / 1e9
-        val callsAfterReg =
-          graft.queries.PipelineQueries.stageCallCounts()
-        // interleave: rotate the visit order by 1/WarmPasses of the
-        // surface per pass so a noisy wall-clock window maps to
-        // DIFFERENT queries in different passes — min/median then shed
-        // it instead of absorbing it
+        val (stageSec, perStage, registered) =
+          stagePhase(spark, sfDir, registrants.getOrElse(names))
+        val callsAfterReg = PipelineQueries.stageCallCounts()
         val off = (pass * names.length) / WarmPasses
         val rotated = names.drop(off) ++ names.take(off)
         val timed = rotated.map { name =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-            catch {
-              case e: Throwable =>
-                errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                  .linesIterator.take(1).mkString
-                e.printStackTrace(System.err)
-                false
-            }
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+          name -> timeCount(spark, sfDir, name).fold(
+            e => {
+              errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+                .linesIterator.take(1).mkString
+              -1.0
+            },
+            _._2)
         }.toMap
         // consumer counts: stage() calls during the TIMED loop only (the
-        // registration pass's own calls subtracted) — one call per
-        // consuming query construction
-        if (firstExec) {
-          consumers = graft.queries.PipelineQueries.stageCallCounts()
+        // stage phase's own calls subtracted) — one call per consuming
+        // query construction
+        if (registrants.isEmpty) {
+          registrants = Some(registered)
+          consumers = PipelineQueries.stageCallCounts()
             .map { case (k, n) => k -> (n - callsAfterReg.getOrElse(k, 0L)) }
-          firstExec = false
         }
         val passWall = stageSec + timed.values.filter(_ >= 0).sum
         passWalls += passWall
         val load = java.lang.management.ManagementFactory
           .getOperatingSystemMXBean.getSystemLoadAverage
-        // discard a contended pass only when the deadline leaves room to
-        // run its replacement — otherwise keep it (a noisy kept number
-        // beats a shed one with no budget to replace it; pass_load in
-        // the tail line exposes the contention either way)
         val canReplace =
-          elapsedSec + passEstimate <= deadlineSec && retriesUsed < maxRetries
-        if (load > loadGate && canReplace) {
-          retriesUsed += 1
+          elapsedSec + passEstimate <= DeadlineSec && retriedSecs.length < MaxRetries
+        if (load > LoadGate && canReplace) {
           retriedSecs += passWall
           retriedLoads += load
           System.err.println(
             f"[bench] pass $pass discarded: load $load%.1f > gate " +
-              f"$loadGate%.1f (retry $retriesUsed/$maxRetries)")
+              f"$LoadGate%.1f (retry ${retriedSecs.length}/$MaxRetries)")
         } else {
           stagePass += perStage
           stageSecs += stageSec
           passLoads += load
           passesBuf += timed
-          // emit the full report after EVERY completed pass — under the
-          // driver's last-2000-chars capture the final complete report
-          // wins, so a capture killed mid-pass still carries every pass
-          // that finished (the r17 rc-124 lesson)
           emitReport()
         }
       }
     }
     spark.stop()
     // final emission after spark.stop() so no executor/log line can
-    // follow it; identical to the last in-loop emission when no state
-    // changed since (same pure buildReport over the same snapshot)
+    // follow it
     emitReport()
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
-/** Writes the FULL `explain("formatted")` text of the named queries to
-  * files — the before/after plan evidence of an optimization round
-  * (plans/rN/<query>_<suffix>.txt). EXPLAIN.md keeps its 60-line
-  * truncation for reviewability; these files are complete.
+/** Writes the full `explain("formatted")` text of the named queries to
+  * `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence of an
+  * optimization (plans/rN/).
   *
   * args: <sfDir> <outDir> <suffix> <queryName>...
   */

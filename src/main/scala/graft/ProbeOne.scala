@@ -1,16 +1,16 @@
 package graft
+
+/** Times named queries, one visit each:
+  * `sbt "runMain graft.ProbeOne <sfDir> <query>..."`. Stages are dropped
+  * before every visit, so each visit pays for the stages it rides; naming
+  * a query N times gives N stage-cold passes. */
 object ProbeOne {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local("probe-one")
-    val dir = args(0)
     args.drop(1).foreach { q =>
-      val t0 = System.nanoTime()
-      try {
-        val n = SparkEntry.queries(q)(spark, dir).count()
-        println(f"[probeone] $q rows=$n sec=${(System.nanoTime()-t0)/1e9}%.1f")
-      } catch { case e: Throwable =>
-        println(s"[probeone] $q FAILED: $e")
-        e.printStackTrace()
+      Bench.dropStages()
+      Bench.timeCount(spark, args(0), q).foreach { case (rows, sec) =>
+        println(f"[probeone] $q rows=$rows sec=$sec%.3f")
       }
     }
     spark.stop()

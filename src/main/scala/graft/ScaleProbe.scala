@@ -1,5 +1,9 @@
 package graft
 
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
 /** Scale-exponent probe: times a fixed set of the historically slowest
   * graded queries at two data scales (sf0.1 and the ScaleGen 10× slice)
   * and reports the time ratio per query — turning the "no scale-killer"
@@ -10,8 +14,8 @@ package graft
   * absorb), then `Passes` timed passes; per query the MIN is reported
   * (contention-immune, same argument as Bench). Stage builds are timed
   * inside their first consumer here — unlike Bench — because at a new
-  * scale the stage build IS part of the cost being measured; the probe
-  * reports the per-dir stage-inclusive totals alongside. */
+  * scale the stage build IS part of the cost being measured; the stage
+  * phase is then timed per stage on its own ([[Bench.stagePhase]]). */
 object ScaleProbe {
 
   private val Probes = Seq(
@@ -90,7 +94,7 @@ object ScaleProbe {
     "q272_anneal_quality_bar", "q279_anneal_quality_bar_bpe")
   private val Passes = 2
 
-  /** The super-linearity gate (round-18, the r17 judge's #5): at 10×
+  /** The super-linearity gate: at 10×
     * data no probe query and no stage may exceed 10× time — anything
     * past the data factor is a super-linear shape that will not
     * survive 100 TB. The by-construction-linear gram family
@@ -100,63 +104,66 @@ object ScaleProbe {
     * the committed SCALEPROBE_rN.json. */
   private[graft] val GateFactor = 10.0
 
+  /** The one-line JSON artifact, committed as SCALEPROBE_rN.json and read
+    * by `ScaleProbeGateSpec`: every query and stage as [small s, big s,
+    * ratio] (ratio -1 where a side failed), every ratio past [[GateFactor]]
+    * by name in `gate_violations`, big maps first and summary scalars
+    * last. Pure, so a spec can pin the writer against the gate's reader. */
+  def artifact(smallDir: String, bigDir: String, probes: Seq[String],
+      tSmall: Map[String, Double], tBig: Map[String, Double],
+      sSmall: Map[String, Double], sBig: Map[String, Double]): String = {
+    def cells(small: Map[String, Double], big: Map[String, Double],
+        keys: Seq[String]) =
+      keys.map(k => (k, small.getOrElse(k, -1.0), big.getOrElse(k, -1.0)))
+    val qs = cells(tSmall, tBig, probes)
+    val ss = cells(sSmall, sBig, (sSmall.keySet ++ sBig.keySet).toSeq.sorted)
+    def obj(cs: Seq[(String, Double, Double)]) = JObject(cs.map {
+      case (k, a, b) =>
+        k -> JArray(List(Bench.num(a, 2), Bench.num(b, 2), Bench.num(ratio(a, b), 2)))
+    }.toList)
+    val violations = JObject((qs ++ ss).collect {
+      case (k, a, b) if ratio(a, b) > GateFactor => k -> Bench.num(ratio(a, b), 2)
+    }.toList)
+    val (sa, sb, ta, tb) = (total(tSmall), total(tBig), total(sSmall), total(sBig))
+    compact(render(("queries" -> obj(qs)) ~ ("stages" -> obj(ss)) ~
+      ("small_dir" -> smallDir) ~ ("big_dir" -> bigDir) ~
+      ("passes" -> Passes) ~ ("n_probes" -> probes.length) ~
+      ("gate_factor" -> GateFactor) ~ ("gate_violations" -> violations) ~
+      ("q_small_total" -> Bench.num(sa, 2)) ~ ("q_big_total" -> Bench.num(sb, 2)) ~
+      ("q_ratio" -> Bench.num(ratio(sa, sb), 3)) ~
+      ("stage_small_total" -> Bench.num(ta, 2)) ~
+      ("stage_big_total" -> Bench.num(tb, 2)) ~
+      ("stage_ratio" -> Bench.num(ratio(ta, tb), 3)) ~
+      ("metric" -> "scale_ratio_10x")))
+  }
+
+  /** big / small, or -1 when either side failed. */
+  private def ratio(small: Double, big: Double): Double =
+    if (small > 0 && big > 0) big / small else -1.0
+
+  private def total(m: Map[String, Double]): Double = m.values.filter(_ >= 0).sum
+
   def main(args: Array[String]): Unit = {
     val small = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val big = if (args.length > 1) args(1) else "/root/repo/tmp/scale10"
     val spark = Sessions.local("graft-scaleprobe")
 
-    /** The STAGE-BUILD phase at this scale, attributed per stage (the
-      * round-12 ask: stages are now the dominant fleet cost, so their
-      * exponent is the one that matters at 100 TB). Plans of every
-      * probe query are constructed (registering the stages the probe
-      * surface rides), then each stage is forced under its own clock in
-      * topological order; min of `Passes` measurements. */
+    /** The stage phase at this scale, per stage, min of `Passes`. */
     def timeStages(dir: String): Map[String, Double] = {
-      val obs = (0 until Passes).map { _ =>
-        graft.queries.PipelineQueries.clearStages()
-        System.gc()
-        Probes.foreach { n =>
-          try { SparkEntry.queries(n)(spark, dir); () }
-          catch { case _: Throwable => () }
-        }
-        graft.queries.PipelineQueries.materializeStagesTimed().toMap
-      }
-      val keys = obs.flatMap(_.keys).distinct
-      keys.map { k =>
-        val xs = obs.flatMap(_.get(k)).filter(_ >= 0)
-        k -> (if (xs.isEmpty) -1.0 else xs.min)
-      }.toMap
+      val obs = Seq.fill(Passes)(Bench.stagePhase(spark, dir, Probes)._2.toMap)
+      obs.flatMap(_.keys).distinct
+        .map(k => k -> Bench.minOk(obs.flatMap(_.get(k)))).toMap
     }
 
+    /** One untimed warm pass, then `Passes` stage-cold timed passes. */
     def timeDir(dir: String): Map[String, Double] = {
-      graft.queries.PipelineQueries.clearStages()
-      System.gc()
-      Probes.foreach { n =>
-        try { SparkEntry.queries(n)(spark, dir).count(); () }
-        catch { case e: Throwable =>
-          System.err.println(s"[probe] warm $n @ $dir failed: $e")
-        }
+      Bench.dropStages()
+      Probes.foreach(Bench.timeCount(spark, dir, _))
+      val obs = Seq.fill(Passes) {
+        Bench.dropStages()
+        Probes.map(n => n -> Bench.timeCount(spark, dir, n).fold(_ => -1.0, _._2)).toMap
       }
-      val obs = (0 until Passes).map { _ =>
-        graft.queries.PipelineQueries.clearStages()
-        System.gc()
-        Probes.map { n =>
-          val t0 = System.nanoTime()
-          // timed failures print too (the r18 lesson: a contended
-          // window's transient error was silently swallowed and the
-          // artifact carried an unexplained -1)
-          val ok = try { SparkEntry.queries(n)(spark, dir).count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[probe] timed $n @ $dir failed: $e")
-              false
-            }
-          n -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        }.toMap
-      }
-      Probes.map { n =>
-        val xs = obs.map(_(n)).filter(_ >= 0)
-        n -> (if (xs.isEmpty) -1.0 else xs.min)
-      }.toMap
+      Probes.map(n => n -> Bench.minOk(obs.map(_(n)))).toMap
     }
 
     val tSmall = timeDir(small)
@@ -164,55 +171,24 @@ object ScaleProbe {
     val sSmall = timeStages(small)
     val sBig = timeStages(big)
     spark.stop()
-    println("| query | sf0.1 s | 10x s | ratio |")
-    println("|---|---|---|---|")
-    Probes.foreach { n =>
-      val (a, b) = (tSmall(n), tBig(n))
-      val r = if (a > 0 && b > 0) f"${b / a}%.2f" else "err"
-      println(f"| $n | $a%.2f | $b%.2f | $r |")
-    }
-    val (sa, sb) = (tSmall.values.filter(_ >= 0).sum,
-      tBig.values.filter(_ >= 0).sum)
-    println(f"TOTALS small=$sa%.2f big=$sb%.2f ratio=${sb / sa}%.2f")
-    println()
-    println("| stage | sf0.1 s | 10x s | ratio |")
-    println("|---|---|---|---|")
-    sSmall.keys.toSeq.sortBy(k => -sBig.getOrElse(k, 0.0)).foreach { k =>
-      val (a, b) = (sSmall.getOrElse(k, -1.0), sBig.getOrElse(k, -1.0))
-      val r = if (a > 0 && b > 0) f"${b / a}%.2f" else "err"
-      println(f"| $k | $a%.2f | $b%.2f | $r |")
-    }
-    val (ta, tb) = (sSmall.values.filter(_ >= 0).sum,
-      sBig.values.filter(_ >= 0).sum)
-    println(f"STAGE TOTALS small=$ta%.2f big=$tb%.2f ratio=${tb / ta}%.2f")
-    // One-line JSON artifact (the round-16 judge's ask: the 10× scale
-    // exponent must be judge-verifiable from a committed per-round
-    // SCALEPROBE_rN.json, not builder prose). Printed LAST so a
-    // tail-line capture gets it whole; big maps first, summary scalars
-    // last — the same truncation discipline as Bench's tail line.
-    def jmap(small: Map[String, Double], big: Map[String, Double],
-        keys: Seq[String]) =
-      keys.map { k =>
+    def table(label: String, small: Map[String, Double],
+        big: Map[String, Double], keys: Seq[String]): Unit = {
+      println(s"| $label | sf0.1 s | 10x s | ratio |")
+      println("|---|---|---|---|")
+      keys.foreach { k =>
         val (a, b) = (small.getOrElse(k, -1.0), big.getOrElse(k, -1.0))
-        val r = if (a > 0 && b > 0) f"${b / a}%.2f" else "-1"
-        "\"" + k + "\":[" + f"$a%.2f" + "," + f"$b%.2f" + "," + r + "]"
-      }.mkString("{", ",", "}")
-    val stageKeys = (sSmall.keySet ++ sBig.keySet).toSeq.sorted
-    // the super-linearity gate, self-reported in the artifact: every
-    // per-query and per-stage ratio past the data factor, by name
-    def viol(small: Map[String, Double], big: Map[String, Double],
-        keys: Seq[String]) =
-      keys.flatMap { k =>
-        val (a, b) = (small.getOrElse(k, -1.0), big.getOrElse(k, -1.0))
-        if (a > 0 && b > 0 && b / a > GateFactor)
-          Some("\"" + k + "\":" + f"${b / a}%.2f")
-        else None
+        val r = if (ratio(a, b) < 0) "err" else f"${ratio(a, b)}%.2f"
+        println(f"| $k | $a%.2f | $b%.2f | $r |")
       }
-    val violations =
-      (viol(tSmall, tBig, Probes) ++ viol(sSmall, sBig, stageKeys))
-        .mkString("{", ",", "}")
-    val line = s"""{"queries":${jmap(tSmall, tBig, Probes)},"stages":${jmap(sSmall, sBig, stageKeys)},"small_dir":"$small","big_dir":"$big","passes":$Passes,"n_probes":${Probes.length},"gate_factor":$GateFactor,"gate_violations":$violations,"q_small_total":${f"$sa%.2f"},"q_big_total":${f"$sb%.2f"},"q_ratio":${f"${sb / sa}%.3f"},"stage_small_total":${f"$ta%.2f"},"stage_big_total":${f"$tb%.2f"},"stage_ratio":${f"${tb / ta}%.3f"},"metric":"scale_ratio_10x"}"""
-    println(line)
+      println(f"$label totals small=${total(small)}%.2f " +
+        f"big=${total(big)}%.2f ratio=${total(big) / total(small)}%.2f")
+      println()
+    }
+    table("query", tSmall, tBig, Probes)
+    table("stage", sSmall, sBig,
+      sSmall.keys.toSeq.sortBy(k => -sBig.getOrElse(k, 0.0)))
+    // printed LAST: the artifact is the run's final stdout line
+    println(artifact(small, big, Probes, tSmall, tBig, sSmall, sBig))
     System.out.flush()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,25 +16,12 @@ object Verify {
       } else _ => true
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = compact(render(JObject(SparkEntry.oracleSql.toList.map {
+      case (k, v) => k -> JString(v)
+    })))
     // oracle_sql.json is written FIRST (pure metadata, zero compute): the
-    // driver's DuckDB compare keys on this file, so writing it after the
-    // per-query parquet loop meant any mid-run death zeroed the whole
-    // round's correctness (CORRECTNESS_r18.json == {}). Written first, a
-    // killed run still grades every query whose parquet landed.
+    // DuckDB oracle compare keys on this file, so a run killed mid-loop
+    // still grades every query whose parquet landed.
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -49,6 +49,30 @@ class PlanAuditSpec extends SparkSpec {
       .queryExecution.executedPlan).mkString("\n")
   }
 
+  /** The registered stages `name`'s live plan reads through an
+    * InMemoryTableScan, matched by cache identity (the scan reads the
+    * stage's own cached data), not by plan text. */
+  private def stagesRead(name: String): Set[String] = {
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Seq[AnyRef] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cacheBuilder)
+      case other => other.children.flatMap(walk)
+    }
+    val read = walk(SparkEntry.queries(name)(spark, dir)
+      .queryExecution.executedPlan)
+    val cache = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    PipelineQueries.stages.toSeq.collect {
+      case ((_, d, key), df) if d == dir &&
+          cache.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+            .exists(c => read.exists(_ eq c.cachedRepresentation.cacheBuilder)) =>
+        key
+    }.toSet
+  }
+
   test("q01: filter and projection are pushed into the parquet scan") {
     val p = plan("q01_scan_filter_project")
     assert(p.contains("isnotnull(l_shipdate") && p.contains("FileScan parquet"))
@@ -861,13 +885,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Generate"), p)
   }
 
-  test("q199: the takedown receipt is four aggregate pairs over cached " +
-    "stores — LeftAnti accounting, no cartesian beyond the broadcast " +
-    "one-row crossJoins") {
-    val p = plan("q199_takedown_receipt")
-    assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("LeftAnti"), p)
-    assert("InMemoryTableScan".r.findAllIn(p).size >= 4, p)
+  test("q199: the takedown receipt is one aggregate per store over the " +
+    "cached stores — each store read through its InMemoryTableScan, the " +
+    "tombstones a broadcast hash join, no nested-loop or cartesian join") {
+    assert(Set("append_codes", "append_index", "sq8_index",
+      "semreg_exemplars").subsetOf(stagesRead("q199_takedown_receipt")))
+    val p = livePlan("q199_takedown_receipt")
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!plan("q199_takedown_receipt").contains("CartesianProduct"), p)
   }
 
   test("q198: the NSW search reads the STORED edge stage for its hops — " +
@@ -1318,19 +1344,19 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q240: the score-store takedown receipt rides the four persisted " +
     "score stages and the doc_source_tokens tombstone source — zero " +
-    "live scans once warm, every purge a broadcast anti-join") {
+    "live scans once warm, every purge a broadcast hash join") {
     SparkEntry.queries("q215_dsir_weights")(spark, dir).count()
     SparkEntry.queries("q224_kneser_ney")(spark, dir).count()
     SparkEntry.queries("q218_nb_classifier")(spark, dir).count()
     SparkEntry.queries("q213_xent_frozen")(spark, dir).count()
     SparkEntry.queries("q236_mix_manifest")(spark, dir).count()
     assert(liveScans("q240_score_takedown").isEmpty)
-    val p = plan("q240_score_takedown")
-    // the only nested-loop joins are purgeReceipt's broadcast 1-row
-    // receipt attaches; a real cartesian is forbidden outright
-    assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert(p.contains("LeftAnti"), p)
+    assert(Set("dsir_scores", "kn_scores", "nb_scores", "uni_scores")
+      .subsetOf(stagesRead("q240_score_takedown")))
+    val p = livePlan("q240_score_takedown")
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!plan("q240_score_takedown").contains("CartesianProduct"), p)
   }
 
   test("q241: the incremental re-pack touches only the blast radius — " +

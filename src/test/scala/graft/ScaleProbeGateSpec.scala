@@ -15,6 +15,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * are skipped — an error is a correctness problem, not an exponent.
   * No SparkSession needed. */
 class ScaleProbeGateSpec extends AnyFunSuite {
+  import ScaleProbeGateSpec._
 
   private val artifact: Option[java.io.File] = {
     val fs = Option(new java.io.File("/root/repo").listFiles())
@@ -25,33 +26,17 @@ class ScaleProbeGateSpec extends AnyFunSuite {
       f.getName.stripPrefix("SCALEPROBE_r").stripSuffix(".json").toInt))
   }
 
-  private def ratios(node: com.fasterxml.jackson.databind.JsonNode)
-      : Seq[(String, Double)] = {
-    val it = node.fieldNames()
-    val buf = scala.collection.mutable.Buffer.empty[(String, Double)]
-    while (it.hasNext) {
-      val k = it.next()
-      val v = node.get(k)
-      val (a, b) = (v.get(0).asDouble(), v.get(1).asDouble())
-      if (a > 0 && b > 0) buf += (k -> b / a)
-    }
-    buf.toSeq
-  }
-
   test("every per-query and per-stage 10x ratio in the committed probe " +
       "artifact stays at or under the data factor") {
     assume(artifact.isDefined, "no committed SCALEPROBE_rN.json yet")
     val j = new ObjectMapper().readTree(artifact.get)
-    val factor =
-      if (j.has("gate_factor")) j.get("gate_factor").asDouble() else 10.0
-    val bad = (ratios(j.get("queries")) ++ ratios(j.get("stages")))
-      .filter(_._2 > factor)
+    val bad = overFactor(j)
     assert(bad.isEmpty,
       s"super-linear probes in ${artifact.get.getName}: " +
         bad.map { case (k, r) => f"$k=$r%.2f" }.mkString(", "))
     // the aggregate exponents gate too
-    assert(j.get("q_ratio").asDouble() <= factor)
-    assert(j.get("stage_ratio").asDouble() <= factor)
+    assert(j.get("q_ratio").asDouble() <= factor(j))
+    assert(j.get("stage_ratio").asDouble() <= factor(j))
   }
 
   test("the artifact's own gate bookkeeping agrees: gate_violations " +
@@ -59,15 +44,39 @@ class ScaleProbeGateSpec extends AnyFunSuite {
     assume(artifact.isDefined, "no committed SCALEPROBE_rN.json yet")
     val j = new ObjectMapper().readTree(artifact.get)
     assume(j.has("gate_violations"), "pre-r18 artifact without the gate")
-    val factor = j.get("gate_factor").asDouble()
-    val expect = (ratios(j.get("queries")) ++ ratios(j.get("stages")))
-      .filter(_._2 > factor).map(_._1).toSet
-    val got = {
-      val it = j.get("gate_violations").fieldNames()
-      val buf = scala.collection.mutable.Buffer.empty[String]
-      while (it.hasNext) buf += it.next()
-      buf.toSet
-    }
-    assert(got === expect)
+    assert(declaredViolations(j) === overFactor(j).map(_._1).toSet)
   }
+}
+
+/** The gate's reading of a probe artifact, shared with
+  * `ScaleProbeArtifactSpec`, which feeds it [[ScaleProbe.artifact]]'s own
+  * output. */
+object ScaleProbeGateSpec {
+  import com.fasterxml.jackson.databind.JsonNode
+
+  def fieldNames(node: JsonNode): Seq[String] = {
+    val it = node.fieldNames()
+    val buf = scala.collection.mutable.Buffer.empty[String]
+    while (it.hasNext) buf += it.next()
+    buf.toSeq
+  }
+
+  /** big / small of every [small, big, ...] cell where both sides ran. */
+  def ratios(node: JsonNode): Seq[(String, Double)] =
+    fieldNames(node).flatMap { k =>
+      val v = node.get(k)
+      val (a, b) = (v.get(0).asDouble(), v.get(1).asDouble())
+      if (a > 0 && b > 0) Some(k -> b / a) else None
+    }
+
+  def factor(j: JsonNode): Double =
+    if (j.has("gate_factor")) j.get("gate_factor").asDouble() else 10.0
+
+  /** Every per-query and per-stage ratio past the artifact's factor. */
+  def overFactor(j: JsonNode): Seq[(String, Double)] =
+    (ratios(j.get("queries")) ++ ratios(j.get("stages")))
+      .filter(_._2 > factor(j))
+
+  def declaredViolations(j: JsonNode): Set[String] =
+    fieldNames(j.get("gate_violations")).toSet
 }
