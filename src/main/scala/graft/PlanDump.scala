@@ -2,7 +2,7 @@ package graft
 
 /** Writes the full `explain("formatted")` text of the named queries to
   * `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence of an
-  * optimization (plans/rN/).
+  * optimization, written on demand rather than kept in the repository.
   *
   * args: <sfDir> <outDir> <suffix> <queryName>...
   */

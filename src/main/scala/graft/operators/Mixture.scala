@@ -103,6 +103,37 @@ object Mixture {
       .drop("__p")
   }
 
+  /** The temperature-α TUNING CURVE — the dial behind
+    * [[temperatureTargets]] (which fixes α = 0.5): per candidate α, the
+    * flattened target share each category would get. All points from
+    * ONE category-count aggregate (k rows), exploded to k·|α| rows with
+    * α as a column; the per-α weight and normalization are windows
+    * partitioned by α over that tiny table — one plan for the whole
+    * grid. α = 1 reproduces the natural shares exactly, α = 0 is
+    * uniform 1/k, and shares flatten monotonically as α falls
+    * (MixtureSpec pins all three). The graded α ∈ {0, 0.5, 1} use
+    * EXACT expressions (1, sqrt, n) so both engines round identically;
+    * other α fall back to pow (whose last-ulp is not cross-engine
+    * guaranteed — fine for exploration, not for grading).
+    * @return (alpha, category, n_docs, share_raw, share_t) */
+  def temperatureCurve(df: DataFrame, categoryCol: String,
+      alphas: Seq[Double]): DataFrame = {
+    require(alphas.nonEmpty, "need at least one alpha")
+    val counts = df.groupBy(col(categoryCol))
+      .agg(count(lit(1)).as("n_docs"))
+    val perAlpha = Window.partitionBy(col("alpha"))
+    val n = col("n_docs").cast("double")
+    val a = col("alpha")
+    counts.withColumn("alpha",
+        explode(array(alphas.distinct.sorted.map(lit): _*)))
+      .withColumn("__w", when(a === 0.0, lit(1.0)).when(a === 0.5, sqrt(n))
+        .when(a === 1.0, n).otherwise(pow(n, a)))
+      .select(col("alpha"), col(categoryCol), col("n_docs"),
+        round(n / sum(col("n_docs")).over(perAlpha).cast("double"), 6)
+          .as("share_raw"),
+        round(col("__w") / sum(col("__w")).over(perAlpha), 6).as("share_t"))
+  }
+
   /** Temperature-scaled mixture targets (α = 0.5): the multilingual /
     * multi-domain rebalancing rule (share ∝ n^α) that upweights small
     * categories without letting giants dominate — the step that produces
@@ -124,39 +155,6 @@ object Mixture {
     * @return (category, n_docs, share_raw, share_t) — raw and temperature-
     *         scaled shares, rounded to 6
     */
-  /** The temperature-α TUNING CURVE — the dial behind
-    * [[temperatureTargets]] (which fixes α = 0.5): per candidate α, the
-    * flattened target share each category would get. All points from
-    * ONE category-count aggregate (k rows); the per-α weight and
-    * normalization are row-local over that tiny table. α = 1 reproduces
-    * the natural shares exactly, α = 0 is uniform 1/k, and shares
-    * flatten monotonically as α falls (MixtureSpec pins all three).
-    * The graded α ∈ {0, 0.5, 1} use EXACT expressions (1, sqrt, n) so
-    * both engines round identically; other α fall back to pow (whose
-    * last-ulp is not cross-engine guaranteed — fine for exploration,
-    * not for grading).
-    * @return (alpha, category, n_docs, share_raw, share_t) */
-  def temperatureCurve(df: DataFrame, categoryCol: String,
-      alphas: Seq[Double]): DataFrame = {
-    require(alphas.nonEmpty, "need at least one alpha")
-    val counts = df.groupBy(col(categoryCol))
-      .agg(count(lit(1)).as("n_docs"))
-    val all = Window.partitionBy()
-    def w(a: Double): Column =
-      if (a == 0.0) lit(1.0)
-      else if (a == 0.5) sqrt(col("n_docs").cast("double"))
-      else if (a == 1.0) col("n_docs").cast("double")
-      else pow(col("n_docs").cast("double"), lit(a))
-    alphas.distinct.sorted.map { a =>
-      counts.withColumn("__w", w(a))
-        .select(lit(a).as("alpha"), col(categoryCol),
-          col("n_docs"),
-          round(col("n_docs").cast("double") /
-            sum(col("n_docs")).over(all).cast("double"), 6).as("share_raw"),
-          round(col("__w") / sum(col("__w")).over(all), 6).as("share_t"))
-    }.reduce(_ unionByName _)
-  }
-
   def temperatureTargets(df: DataFrame, categoryCol: String): DataFrame = {
     val counts = df.groupBy(col(categoryCol))
       .agg(count(lit(1)).as("n_docs"))
@@ -221,7 +219,7 @@ object Mixture {
     require(budgetNum > 0 && budgetDen > 0,
       "the budget fraction must be positive")
     waterfill(counts.select(col(domainCol), col(tokCol).as("n_tok")),
-      domainCol, maxEpochs,
+      domainCol, epochCap(maxEpochs),
       expr(s"(sum(n_tok) over () * $budgetNum) div $budgetDen"))
   }
 
@@ -232,9 +230,17 @@ object Mixture {
     * of the WHOLE run's tokens, not of the high-quality pool it
     * allocates over, so the caller derives the budget from one table
     * and waterfills another. The budget row is broadcast onto the
-    * k-row domain table (domain-sized work, the mixture-family idiom). */
+    * k-row domain table (domain-sized work, the mixture-family idiom).
+    *
+    * `keys` (default none) name GRID columns of `counts`: every distinct
+    * key value is its own independent waterfill at the same budget —
+    * the windows partition by the keys, so a whole grid of allocations
+    * is one plan over the |grid|·k-row table, and each group's rows
+    * equal a standalone call on that group's slice. The keys lead the
+    * output columns. */
   def unimaxAllocationBudget(counts: DataFrame, domainCol: String,
-      tokCol: String, maxEpochs: Long, budget: DataFrame): DataFrame = {
+      tokCol: String, maxEpochs: Long, budget: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
     // enforce the one-row contract: an empty budget would silently
     // return an empty allocation and a multi-row budget would duplicate
     // every domain row through the crossJoin — both fail fast instead
@@ -245,9 +251,9 @@ object Mixture {
           raise_error(concat(
             lit("unimaxAllocationBudget: budget must be exactly one row, got "),
             col("__c").cast("string")))).as("__b")))
-    waterfill(counts.select(col(domainCol), col(tokCol).as("n_tok"))
-        .crossJoin(b),
-      domainCol, maxEpochs, col("__b"))
+    waterfill(counts.select(keys.map(col) ++
+        Seq(col(domainCol), col(tokCol).as("n_tok")): _*).crossJoin(b),
+      domainCol, epochCap(maxEpochs), col("__b"), keys)
   }
 
   /** CONFUSION-CORRECTED grouped masses — de-biasing router-filed
@@ -307,10 +313,10 @@ object Mixture {
     *
     * Scale shape: the k² (dropped, source) pairs come from one
     * self-cross of the k-row DOMAIN table (the mixture-family
-    * contract — never a corpus), every window below is PARTITIONED by
-    * `dropped` (k groups of k−1 rows), and the closed-form saturation
-    * algebra is [[unimaxAllocation]]'s, row for row. The budget is the
-    * full table's ⌊T·num/den⌋, broadcast onto the pairs.
+    * contract — never a corpus), and all k drops are ONE waterfill
+    * grouped by `dropped` (k groups of k−1 rows) — the same windows as
+    * the base allocation. The budget is the full table's ⌊T·num/den⌋,
+    * broadcast onto the pairs.
     *
     * @return one row per ordered (dropped, source) pair, source ≠
     *         dropped: (dropped, source, n_tok, alloc_base, alloc_drop,
@@ -318,57 +324,48 @@ object Mixture {
   def leaveOneOutSensitivity(counts: DataFrame, domainCol: String,
       tokCol: String, maxEpochs: Long, budgetNum: Long,
       budgetDen: Long): DataFrame = {
-    require(maxEpochs > 0 && budgetNum > 0 && budgetDen > 0,
-      "maxEpochs and the budget fraction must be positive")
+    require(budgetNum > 0 && budgetDen > 0,
+      "the budget fraction must be positive")
     val dom = counts.select(col(domainCol).as("source"),
       col(tokCol).cast("long").as("n_tok"))
-    val budget = broadcast(dom.agg(
-      expr(s"(sum(n_tok) * $budgetNum) div $budgetDen").as("__b")))
+    val budget = dom.agg(
+      expr(s"(sum(n_tok) * $budgetNum) div $budgetDen").as("__b"))
     val base = unimaxAllocationBudget(dom, "source", "n_tok",
         maxEpochs, budget)
       .select(col("source"), col("alloc").as("alloc_base"))
     val pairs = dom.select(col("source").as("dropped"))
       .crossJoin(dom)
       .filter(col("dropped") =!= col("source"))
-      .withColumn("cap", col("n_tok") * lit(maxEpochs))
-    val wOrd = Window.partitionBy(col("dropped"))
-      .orderBy(col("cap"), col("source"))
-    val wAll = Window.partitionBy(col("dropped"))
-    val solved = pairs.crossJoin(budget)
-      .withColumn("_r", row_number().over(wOrd).cast("long"))
-      .withColumn("_s", coalesce(sum(col("cap")).over(
-        wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_k", count(lit(1)).over(wAll))
-      .withColumn("saturated",
-        col("cap") * (col("_k") - col("_r") + 1L) + col("_s") <= col("__b"))
-      .withColumn("_m", sum(when(col("saturated"), 1L).otherwise(0L))
-        .over(wAll))
-      .withColumn("_ssat", coalesce(sum(when(col("saturated"), col("cap")))
-        .over(wAll), lit(0L)))
-      .withColumn("_share", when(col("_k") > col("_m"),
-        expr("(__b - _ssat) div (_k - _m)")).otherwise(lit(0L)))
-      .withColumn("alloc_drop",
-        when(col("saturated"), col("cap")).otherwise(col("_share")))
-    solved.join(broadcast(base), Seq("source"))
+    unimaxAllocationBudget(pairs, "source", "n_tok", maxEpochs, budget,
+        keys = Seq("dropped"))
+      .join(broadcast(base), Seq("source"))
       .select(col("dropped"), col("source"), col("n_tok"),
-        col("alloc_base"), col("alloc_drop"),
-        (col("alloc_drop") - col("alloc_base")).as("delta"))
+        col("alloc_base"), col("alloc").as("alloc_drop"),
+        (col("alloc") - col("alloc_base")).as("delta"))
+  }
+
+  /** Epoch cap `maxEpochs` as the waterfill's per-row multiplier. */
+  private def epochCap(maxEpochs: Long): Column = {
+    require(maxEpochs > 0, "maxEpochs must be positive")
+    lit(maxEpochs)
   }
 
   /** The shared closed-form waterfill (see [[unimaxAllocation]] for the
-    * math and the domain-sized-table window contract); `bCol` evaluates
-    * the exact-integer budget per row. */
+    * math and the domain-sized-table window contract); `epochs`
+    * evaluates the epoch cap and `bCol` the exact-integer budget per
+    * row. Every window partitions by `keys`, so each distinct key value
+    * is its own waterfill (none: the whole table is one); the keys lead
+    * the output columns. */
   private def waterfill(counts0: DataFrame, domainCol: String,
-      maxEpochs: Long, bCol: Column): DataFrame = {
-    require(maxEpochs > 0, "maxEpochs must be positive")
+      epochs: Column, bCol: Column, keys: Seq[String] = Nil): DataFrame = {
     val base = counts0
       .withColumn("n_tok", when(col("n_tok") >= 0, col("n_tok"))
         .otherwise(raise_error(concat(
           lit("unimaxAllocation: negative n_tok for domain "),
           col(domainCol).cast("string")))))
-      .withColumn("cap", col("n_tok") * lit(maxEpochs))
-    val wOrd = Window.orderBy(col("cap"), col(domainCol))
-    val all = Window.partitionBy()
+      .withColumn("cap", col("n_tok") * epochs)
+    val all = Window.partitionBy(keys.map(col): _*)
+    val wOrd = all.orderBy(col("cap"), col(domainCol))
     val ranked = base
       .withColumn("_r", row_number().over(wOrd).cast("long"))
       .withColumn("_s", coalesce(sum(col("cap")).over(
@@ -386,13 +383,13 @@ object Mixture {
         expr("(_b - _ssat) div (_k - _m)")).otherwise(lit(0L)))
       .withColumn("alloc",
         when(col("saturated"), col("cap")).otherwise(col("_share")))
-    solved.select(col(domainCol), col("n_tok"), col("cap"),
-      col("saturated"), col("alloc"),
+    solved.select(keys.map(col) ++ Seq(col(domainCol), col("n_tok"),
+      col("cap"), col("saturated"), col("alloc"),
       when(col("n_tok") > 0,
         round(col("alloc").cast("double") / col("n_tok").cast("double"), 4))
         .otherwise(lit(0.0)).as("epochs_used"),
       (col("_b") - col("_ssat") - col("_share") * (col("_k") - col("_m")))
-        .as("leftover"))
+        .as("leftover")): _*)
   }
 
   /** Data-constrained scaling value card (Muennighoff et al., NeurIPS
@@ -454,8 +451,11 @@ object Mixture {
     * engine and any partitioning; summing the raw doubles would leak
     * reduction order.
     *
-    * Scale shape: |caps| waterfills over the SAME k-row domain table —
-    * domain-sized work per point, the corpus never re-read.
+    * Scale shape: ONE waterfill over the k-row domain table exploded
+    * to |caps|·k rows, grouped by the cap (every cap keeps the whole
+    * table's budget), one [[dataConstrainedValue]] projection and one
+    * aggregate grouped by the cap — domain-sized work, the corpus never
+    * re-read.
     *
     * @return one row per cap: (max_epochs, n_domains, n_saturated,
     *         total_alloc, leftover, eff_tokens, value_frac) */
@@ -463,30 +463,42 @@ object Mixture {
       caps: Seq[Long], budgetNum: Long, budgetDen: Long,
       rstar: Double = 15.39): DataFrame = {
     require(caps.nonEmpty, "need at least one cap point")
-    caps.distinct.sorted.map { cap =>
-      val al = unimaxAllocation(counts, domainCol, tokCol, cap,
-        budgetNum, budgetDen)
-      val valued = dataConstrainedValue(
-        al.select(col(domainCol), col("n_tok"), col("alloc")),
-        domainCol, "n_tok", "alloc", rstar)
-        .select(col(domainCol),
-          round(col("eff_tokens") * 100).cast("long").as("__cents"))
-      // every sum coalesced: an empty domain table must yield a zeroed
-      // curve row, not nulls (EmptyInputSpec pins it)
-      al.join(valued, Seq(domainCol))
-        .agg(count(lit(1)).as("n_domains"),
-          coalesce(sum(when(col("saturated"), 1L).otherwise(0L)), lit(0L))
-            .as("n_saturated"),
-          coalesce(sum(col("alloc")), lit(0L)).as("total_alloc"),
-          coalesce(min(col("leftover")), lit(0L)).as("leftover"),
-          coalesce(sum(col("__cents")), lit(0L)).as("__c"))
-        .select(lit(cap).as("max_epochs"), col("n_domains"),
-          col("n_saturated"), col("total_alloc"), col("leftover"),
-          (col("__c").cast("double") / lit(100.0)).as("eff_tokens"),
-          when(col("total_alloc") > 0,
-            round(col("__c").cast("double") /
-              (col("total_alloc").cast("double") * lit(100.0)), 6))
-            .otherwise(lit(0.0)).as("value_frac"))
-    }.reduce(_ unionByName _)
+    require(budgetNum > 0 && budgetDen > 0,
+      "the budget fraction must be positive")
+    val grid = array(caps.distinct.sorted.map(epochCap): _*)
+    val al = waterfill(counts.select(col(domainCol), col(tokCol).as("n_tok"),
+        explode(grid).as("max_epochs")),
+      domainCol, col("max_epochs"),
+      expr(s"(sum(n_tok) over (partition by max_epochs) * $budgetNum) " +
+        s"div $budgetDen"),
+      Seq("max_epochs"))
+    // dataConstrainedValue keys its rows by one column: the (cap,
+    // domain) pair rides through it as a struct
+    val key = Seq("max_epochs", domainCol)
+    val valued = dataConstrainedValue(
+        al.select(struct(key.map(col): _*).as("__key"), col("n_tok"),
+          col("alloc")),
+        "__key", "n_tok", "alloc", rstar)
+      .select(col("__key.*"),
+        round(col("eff_tokens") * 100).cast("long").as("__cents"))
+    // the cap grid drives a left join and every sum is coalesced: an
+    // empty domain table must yield a zeroed row per cap, not nulls or
+    // no row (EmptyInputSpec pins it)
+    counts.sparkSession.range(1).select(explode(grid).as("max_epochs"))
+      .join(al.join(valued, key), Seq("max_epochs"), "left")
+      .groupBy(col("max_epochs"))
+      .agg(count(col(domainCol)).as("n_domains"),
+        coalesce(sum(when(col("saturated"), 1L).otherwise(0L)), lit(0L))
+          .as("n_saturated"),
+        coalesce(sum(col("alloc")), lit(0L)).as("total_alloc"),
+        coalesce(min(col("leftover")), lit(0L)).as("leftover"),
+        coalesce(sum(col("__cents")), lit(0L)).as("__c"))
+      .select(col("max_epochs"), col("n_domains"),
+        col("n_saturated"), col("total_alloc"), col("leftover"),
+        (col("__c").cast("double") / lit(100.0)).as("eff_tokens"),
+        when(col("total_alloc") > 0,
+          round(col("__c").cast("double") /
+            (col("total_alloc").cast("double") * lit(100.0)), 6))
+          .otherwise(lit(0.0)).as("value_frac"))
   }
 }

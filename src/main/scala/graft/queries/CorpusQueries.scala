@@ -203,11 +203,12 @@ object CorpusQueries {
     * ONE pass: the per-(source, threshold) masses are a suffix-sum over
     * one pool-sized groupBy (threshold t's pool is the union of deciles
     * >= t — domain-sized arithmetic after the single aggregate), the ten
-    * waterfills stay k-row window plans, and the realization explodes
-    * each pool row into its qualifying thresholds (t <= qdec) and ranks
-    * every (threshold, source) group in one window. Per group the join
-    * + cumsum math is [[realizeFromAllocBy]] == the historic
-    * [[realizeFromAlloc]], so the realized rows are bit-identical. */
+    * waterfills are ONE waterfill over the sources×10-row table grouped
+    * by threshold, and the realization explodes each pool row into its
+    * qualifying thresholds (t <= qdec) and ranks every (threshold,
+    * source) group in one window. Per group the waterfill and the join
+    * + cumsum math of [[realizeFromAllocBy]] are the per-threshold
+    * ones, so the realized rows are bit-identical. */
   private def annealBarRealizedFrom(s: SparkSession, ch: ScheduleChain,
       pool: DataFrame): DataFrame = {
     val thresholds = s.range(0L, 10L).select(col("id").as("threshold"))
@@ -218,23 +219,14 @@ object CorpusQueries {
     // per-(source, threshold) pool mass = suffix sum over the decile
     // histogram; every ch.pool source keeps a (zero-coalesced) row per
     // threshold, exactly like the historic per-threshold left join
-    // localCheckpoint (eager, sources×10 rows): the ten allocation
-    // branches below each embed this subtree — checkpointed, the pool
-    // aggregate runs once instead of relying on exchange reuse
     val counts = ch.pool.select(col("source")).crossJoin(thresholds)
       .join(broadcast(bySrcDec),
         col("source") === col("__src") && col("qdec") >= col("threshold"),
         "left")
       .groupBy(col("source"), col("threshold"))
       .agg(coalesce(sum(col("__tk")), lit(0L)).as("n_tok"))
-      .localCheckpoint(true)
-    val allocAll = (0L to 9L).map { t =>
-      Mixture.unimaxAllocationBudget(
-          counts.filter(col("threshold") === t)
-            .select(col("source"), col("n_tok")),
-          "source", "n_tok", 1L, ch.b2)
-        .withColumn("threshold", lit(t))
-    }.reduce(_ unionByName _)
+    val allocAll = Mixture.unimaxAllocationBudget(counts, "source",
+      "n_tok", 1L, ch.b2, keys = Seq("threshold"))
     val pool10 = pool.withColumn("threshold",
       explode(sequence(lit(0L), col("qdec"))))
     realizeFromAllocBy(pool10, allocAll, Seq("threshold", "source"))
@@ -462,8 +454,8 @@ object CorpusQueries {
   private[queries] def mixRealize(perDoc: DataFrame, counts: DataFrame,
       maxEpochs: Long = 4L, budgetNum: Long = 2L, budgetDen: Long = 1L)
       : DataFrame =
-    realizeFromAlloc(perDoc, Mixture.unimaxAllocation(counts,
-      "source", "n_tok", maxEpochs, budgetNum, budgetDen))
+    realizeFromAllocBy(perDoc, Mixture.unimaxAllocation(counts,
+      "source", "n_tok", maxEpochs, budgetNum, budgetDen), Seq("source"))
 
   /** [[mixRealize]] with an EXPLICIT one-row budget (the
     * [[Mixture.unimaxAllocationBudget]] form) — what a multi-phase
@@ -476,24 +468,19 @@ object CorpusQueries {
   private[queries] def mixRealizeBudget(perDoc: DataFrame,
       counts: DataFrame, maxEpochs: Long, budget: DataFrame,
       rankPrefix: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    realizeFromAlloc(perDoc, Mixture.unimaxAllocationBudget(counts,
-      "source", "n_tok", maxEpochs, budget), rankPrefix)
+    realizeFromAllocBy(perDoc, Mixture.unimaxAllocationBudget(counts,
+      "source", "n_tok", maxEpochs, budget), Seq("source"), rankPrefix)
 
-  /** The shared realization tail: decompose each source's allocation
-    * into full epochs + the md5-ranked minimal-overshoot remainder
-    * prefix over `perDoc` (`rankPrefix` columns, if any, outrank the
-    * md5). */
-  private def realizeFromAlloc(perDoc: DataFrame, alloc0: DataFrame,
-      rankPrefix: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    realizeFromAllocBy(perDoc, alloc0, Seq("source"), rankPrefix)
-
-  /** [[realizeFromAlloc]] generalized to a composite allocation key —
-    * the round-19 single-window form of the ten-threshold anneal
-    * realization: with keys = (threshold, source) the ONE window ranks
-    * every (threshold, source) group at once, replacing ten sequential
-    * pool-subset shuffles with one exchange of the exploded rows (guide
-    * §2.4 — same bytes, one pass). Per group the math is unchanged, so
-    * keys = Seq("source") is the historic operator bit-for-bit. */
+  /** The shared realization tail: decompose each allocation group's
+    * allocation into full epochs + the md5-ranked minimal-overshoot
+    * remainder prefix over `perDoc` (`rankPrefix` columns, if any,
+    * outrank the md5). `keys` is the allocation key — Seq("source") for
+    * one realization; with keys = (threshold, source) the ONE window
+    * ranks every (threshold, source) group at once, the round-19
+    * single-window form of the ten-threshold anneal realization (one
+    * exchange of the exploded rows in place of ten sequential
+    * pool-subset shuffles, guide §2.4). Per group the math is
+    * unchanged. */
   private def realizeFromAllocBy(perDoc: DataFrame, alloc0: DataFrame,
       keys: Seq[String],
       rankPrefix: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
@@ -1406,9 +1393,9 @@ object CorpusQueries {
     // decays under the q233 law. The row a run reads: eff_tokens —
     // pick the cap that maximizes it. Per-source effective tokens are
     // 2-dp by construction, so the curve sums their exact CENT counts
-    // as longs (order-free, engine-exact) and divides back once. Four
-    // waterfills over the persisted 20-row source_tokens stage —
-    // domain-sized work per point, the corpus never re-read.
+    // as longs (order-free, engine-exact) and divides back once. One
+    // waterfill grouped by cap over the persisted 20-row source_tokens
+    // stage — domain-sized work, the corpus never re-read.
     "q249_epoch_cap_curve" -> ((s, dir) =>
       Mixture.epochCapCurve(sourceTokensStage(s, dir), "source", "n_tok",
           caps = Seq(1L, 2L, 4L, 8L), budgetNum = 2L, budgetDen = 1L)
@@ -2672,7 +2659,8 @@ object CorpusQueries {
     // (which fixes α = 0.5), closing the last un-curved dial: per
     // candidate α, the flattened target share each discovered topic
     // would get. One category-count aggregate over the persisted
-    // assignment; every α point is row-local over those k rows. α = 1
+    // assignment; all α points are one plan over those k rows with α as
+    // a column, the normalizers windows partitioned by α. α = 1
     // reproduces the natural shares, α = 0 is uniform, and the max
     // share flattens monotonically as α falls (MixtureSpec pins it).
     "q204_temperature_curve" -> ((s, dir) => {

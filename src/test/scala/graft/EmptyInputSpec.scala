@@ -125,12 +125,17 @@ class EmptyInputSpec extends SparkSpec {
     val cms = Sketches.countMinWidthCurve(d, col("doc_id").cast("string"),
       widths = Seq(16L, 64L), depth = 3)
     assertNoNulls(cms)
-    assert(cms.collect().forall(r => r.getAs[Long]("n_keys") === 0L &&
+    // one row per width: forall alone would pass on a vanished curve
+    val cmsRows = cms.collect()
+    assert(cmsRows.length === 2)
+    assert(cmsRows.forall(r => r.getAs[Long]("n_keys") === 0L &&
       r.getAs[Double]("mean_over") === 0.0))
     val bloom = Sketches.bloomSizingCurve(d, d,
       col("doc_id").cast("string"), numBitsCurve = Seq(64L), numHashes = 2)
     assertNoNulls(bloom)
-    assert(bloom.collect().forall(_.getAs[Double]("fp_rate") === 0.0))
+    val bloomRows = bloom.collect()
+    assert(bloomRows.length === 1)
+    assert(bloomRows.forall(_.getAs[Double]("fp_rate") === 0.0))
   }
 
   test("lsh geometry curve: empty signatures and truth produce guarded " +
@@ -140,7 +145,9 @@ class EmptyInputSpec extends SparkSpec {
     val truth = Seq.empty[(Long, Long)].toDF("d1", "d2")
     val curve = NearDup.lshGeometryCurve(sigs, Seq((4, 2)), truth)
     assertNoNulls(curve)
-    curve.collect().foreach { r =>
+    val rows = curve.collect()
+    assert(rows.length === 1) // one row per geometry, even on no input
+    rows.foreach { r =>
       assert(r.getAs[Long]("n_candidates") === 0L)
       assert(r.getAs[Double]("recall") === 0.0)
       assert(r.getAs[Double]("precision") === 0.0)

@@ -391,4 +391,85 @@ class MixtureSpec extends SparkSpec {
       .toMap
     assert(dropA === Map("b" -> 200L, "c" -> 700L, "d" -> 1800L))
   }
+
+  // --- grouped grids equal their per-point calls -----------------------------
+
+  /** A domain table with a zero-capacity domain, and budgets under which
+    * some caps saturate every domain and others leave the large ones
+    * unsaturated. */
+  private def gridDomains = {
+    import sqlImplicits._
+    Seq(("z", 0L), ("a", 10L), ("b", 50L), ("c", 200L), ("d", 1000L))
+      .toDF("dom", "n_tok")
+  }
+
+  test("epochCapCurve: every grouped cap row equals a standalone " +
+      "unimaxAllocation + dataConstrainedValue at that cap") {
+    val caps = Seq(16L, 1L, 4L, 2L, 4L)
+    val curve = Mixture.epochCapCurve(gridDomains, "dom", "n_tok",
+        caps = caps, budgetNum = 1L, budgetDen = 1L)
+      .collect().map(r => r.getAs[Long]("max_epochs") -> r).toMap
+    assert(curve.keySet === caps.toSet)
+    val nSat = caps.distinct.map { cap =>
+      val one = Mixture.unimaxAllocation(gridDomains, "dom", "n_tok", cap,
+        1L, 1L)
+      val al = one.collect()
+      val cents = Mixture.dataConstrainedValue(
+          one.select(col("dom"), col("n_tok"), col("alloc")),
+          "dom", "n_tok", "alloc").collect()
+        .map(r => math.round(r.getAs[Double]("eff_tokens") * 100)).sum
+      val total = al.map(_.getAs[Long]("alloc")).sum
+      val sat = al.count(_.getAs[Boolean]("saturated")).toLong
+      val r = curve(cap)
+      assert(r.getAs[Long]("n_domains") === 5L, r.toString)
+      assert(r.getAs[Long]("n_saturated") === sat, r.toString)
+      assert(r.getAs[Long]("total_alloc") === total, r.toString)
+      assert(r.getAs[Long]("leftover") ===
+        al.map(_.getAs[Long]("leftover")).min, r.toString)
+      assert(r.getAs[Double]("eff_tokens") === cents / 100.0, r.toString)
+      assert(r.getAs[Double]("value_frac") === BigDecimal(
+        cents.toDouble / (total.toDouble * 100.0))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r.toString)
+      sat
+    }
+    // the grid exercises both regimes: some cap saturates every domain,
+    // another leaves some unsaturated
+    assert(nSat.contains(5L) && nSat.exists(_ < 5L), nSat.toString)
+  }
+
+  test("unimaxAllocationBudget keyed by a grid column: each group's rows " +
+      "equal a standalone call on that group's slice") {
+    import sqlImplicits._
+    val grid = gridDomains.crossJoin(Seq(1L, 3L).toDF("g"))
+      .withColumn("n_tok", col("n_tok") * col("g"))
+    val budget = Seq(700L).toDF("b")
+    val keyed = Mixture.unimaxAllocationBudget(grid, "dom", "n_tok", 2L,
+      budget, keys = Seq("g"))
+    assert(keyed.columns.head === "g")
+    Seq(1L, 3L).foreach { g =>
+      val one = Mixture.unimaxAllocationBudget(
+        grid.filter(col("g") === g).select(col("dom"), col("n_tok")),
+        "dom", "n_tok", 2L, budget)
+      val got = keyed.filter(col("g") === g).drop("g")
+      assert(got.exceptAll(one).isEmpty && one.exceptAll(got).isEmpty,
+        s"group g=$g")
+    }
+  }
+
+  test("temperatureCurve: every alpha's rows in the grouped curve equal " +
+      "a one-alpha call") {
+    import sqlImplicits._
+    val cat = Seq("x" -> 1, "y" -> 4, "y" -> 5, "z" -> 6, "z" -> 7,
+        "z" -> 8, "w" -> 9, "w" -> 10, "w" -> 11, "w" -> 12)
+      .toDF("topic", "id")
+    val alphas = Seq(1.0, 0.0, 0.75, 0.5)
+    val curve = Mixture.temperatureCurve(cat, "topic", alphas)
+    assert(curve.count() === 4L * alphas.size)
+    alphas.foreach { a =>
+      val got = curve.filter(col("alpha") === a)
+      val one = Mixture.temperatureCurve(cat, "topic", Seq(a))
+      assert(got.exceptAll(one).isEmpty && one.exceptAll(got).isEmpty,
+        s"alpha=$a")
+    }
+  }
 }

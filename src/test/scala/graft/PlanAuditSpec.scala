@@ -36,7 +36,11 @@ class PlanAuditSpec extends SparkSpec {
     * stage's (already-paid) build plan — which the plain string
     * rendering of [[plan]] DOES include — can't leak its operators into
     * a "the warm query must not do X" assertion. */
-  private def livePlan(name: String): String = {
+  private def livePlan(name: String): String =
+    liveText(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+
+  private def liveText(plan: org.apache.spark.sql.execution.SparkPlan)
+      : String = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -45,8 +49,21 @@ class PlanAuditSpec extends SparkSpec {
       case _: InMemoryTableScanExec => Seq("InMemoryTableScan")
       case other => other.simpleString(24) +: other.children.flatMap(walk)
     }
-    walk(SparkEntry.queries(name)(spark, dir)
-      .queryExecution.executedPlan).mkString("\n")
+    walk(plan).mkString("\n")
+  }
+
+  /** The build plan of the registered stage `key` as text, in
+    * [[livePlan]]'s form: the physical plan its cache entry was built
+    * from, with the stages IT reads as InMemoryTableScan leaves. */
+  private def stageBuildPlan(key: String): String = {
+    import org.apache.spark.sql.classic
+    val cache = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    val df = PipelineQueries.stages.collectFirst {
+      case ((_, d, k), df) if d == dir && k == key => df
+    }.getOrElse(fail(s"stage $key is not registered"))
+    val cached = cache.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .getOrElse(fail(s"stage $key is not cached"))
+    liveText(cached.cachedRepresentation.cacheBuilder.cachedPlan)
   }
 
   /** The registered stages `name`'s live plan reads through an
@@ -1562,6 +1579,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("InMemoryTableScan"), p)
     assert(liveScans("q249_epoch_cap_curve").isEmpty, p)
+  }
+
+  test("the Mixture grids are single grouped plans: no Union in the " +
+    "live plans of q204 (alpha grid) and q249 (cap grid), nor in the " +
+    "build plans of the ten-threshold anneal stages behind q272 and " +
+    "q279 (threshold grid)") {
+    Seq("q204_temperature_curve", "q249_epoch_cap_curve").foreach { q =>
+      val p = livePlan(q)
+      assert(!p.contains("Union"), s"$q:\n$p")
+    }
+    SparkEntry.queries("q272_anneal_quality_bar")(spark, dir)
+    SparkEntry.queries("q279_anneal_quality_bar_bpe")(spark, dir)
+    Seq("anneal_bar_realized", "anneal_bar_realized_bpe").foreach { key =>
+      val p = stageBuildPlan(key)
+      assert(!p.contains("Union"), s"$key:\n$p")
+    }
   }
 
   test("q248: both phase waterfills and the quality pool ride persisted " +
