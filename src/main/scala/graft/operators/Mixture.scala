@@ -313,10 +313,12 @@ object Mixture {
     *
     * Scale shape: the k² (dropped, source) pairs come from one
     * self-cross of the k-row DOMAIN table (the mixture-family
-    * contract — never a corpus), and all k drops are ONE waterfill
-    * grouped by `dropped` (k groups of k−1 rows) — the same windows as
-    * the base allocation. The budget is the full table's ⌊T·num/den⌋,
-    * broadcast onto the pairs.
+    * contract — never a corpus), and the k drops plus the base
+    * allocation are ONE waterfill grouped by `dropped`: k groups of k−1
+    * rows, and the k diagonal pairs as one null-`dropped` group that is
+    * the full table, read back onto every row by a window over
+    * `source`. The budget is the full table's ⌊T·num/den⌋, broadcast
+    * onto the pairs.
     *
     * @return one row per ordered (dropped, source) pair, source ≠
     *         dropped: (dropped, source, n_tok, alloc_base, alloc_drop,
@@ -330,15 +332,19 @@ object Mixture {
       col(tokCol).cast("long").as("n_tok"))
     val budget = dom.agg(
       expr(s"(sum(n_tok) * $budgetNum) div $budgetDen").as("__b"))
-    val base = unimaxAllocationBudget(dom, "source", "n_tok",
-        maxEpochs, budget)
-      .select(col("source"), col("alloc").as("alloc_base"))
-    val pairs = dom.select(col("source").as("dropped"))
+    // the k diagonal pairs (d = s) form the null-`dropped` group: every
+    // domain exactly once, i.e. the base allocation; pairs with a null
+    // domain on either side belong to no drop group
+    val pairs = dom.select(col("source").as("__d"))
       .crossJoin(dom)
-      .filter(col("dropped") =!= col("source"))
+      .filter(col("__d") <=> col("source") || col("__d") =!= col("source"))
+      .select(when(col("__d") =!= col("source"), col("__d")).as("dropped"),
+        col("source"), col("n_tok"))
     unimaxAllocationBudget(pairs, "source", "n_tok", maxEpochs, budget,
         keys = Seq("dropped"))
-      .join(broadcast(base), Seq("source"))
+      .withColumn("alloc_base", max(when(col("dropped").isNull,
+        col("alloc"))).over(Window.partitionBy(col("source"))))
+      .filter(col("dropped").isNotNull)
       .select(col("dropped"), col("source"), col("n_tok"),
         col("alloc_base"), col("alloc").as("alloc_drop"),
         (col("alloc") - col("alloc_base")).as("delta"))

@@ -99,13 +99,23 @@ object Similarity {
 
   /** Per-`label` element-wise mean vectors, components rounded to 6 decimals
     * so the (reduction-order-sensitive) float sums compare equal across
-    * engines. Stand-in for a k-means coarse quantizer: same plan shape
-    * (explode → grouped mean → re-assemble), deterministic for the oracle. */
+    * engines. Stand-in for a k-means coarse quantizer: the [[elementMean]]
+    * plan keyed by `label`, deterministic for the oracle. Any groupable
+    * `label` works, a struct of several keys included. */
   def labelCentroids(corpus: DataFrame): DataFrame =
-    corpus.select(col("label"), posexplode(asDouble(col("embedding"))))
-      .groupBy(col("label"), col("pos"))
+    elementMean(corpus.select(col("label"),
+      asDouble(col("embedding")).as("e")), Seq("label"))
+
+  /** The element-wise mean of the float64 vectors `e` per distinct
+    * `keys` tuple, components rounded to 6: explode by position, one
+    * grouped mean keyed by (keys…, pos), re-assemble in position order.
+    * Output: (keys…, centroid). Every centroid table in this object —
+    * label, Lloyd, PQ codebook — is this plan under its own keys. */
+  private def elementMean(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.select(keys.map(col) :+ posexplode(col("e")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
       .agg(avg(col("col")).as("v"))
-      .groupBy(col("label"))
+      .groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
         s => round(s.getField("v"), 6)).as("centroid"))
 
@@ -254,29 +264,61 @@ object Similarity {
   /** Nearest-centroid assignment core shared by SemDeDup and Lloyd
     * training: broadcast the centroid table, per-row argmax of the rounded
     * cosine (ties to the smallest cluster id via the max-struct total
-    * order) — the shuffle carries one row per vector. */
-  private def assignTo(vectors: DataFrame, cents: DataFrame): DataFrame =
-    vectors.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("e"),
+    * order) — the shuffle carries one row per vector. With `keys`, every
+    * key tuple is its own quantizer: vectors meet only the centroids of
+    * their own key (a broadcast equi-join instead of the crossJoin) and
+    * the argmax is per (keys…, vec_id). Output: (keys…, vec_id, e,
+    * cluster). */
+  private def assignTo(vectors: DataFrame, cents: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val ks = keys.map(col)
+    (if (keys.isEmpty) vectors.crossJoin(broadcast(cents))
+     else vectors.join(broadcast(cents), keys))
+      .select(ks ++ Seq(col("vec_id"), col("e"),
         struct(round(cosine(col("e"), col("centroid")), 6).as("sim"),
-          (-col("clab")).as("nl")).as("sc"))
-      .groupBy(col("vec_id"))
+          (-col("clab")).as("nl")).as("sc")): _*)
+      .groupBy(ks :+ col("vec_id"): _*)
       .agg(max(col("sc")).as("m"), first(col("e")).as("e"))
-      .select(col("vec_id"), col("e"),
-        (-col("m.nl")).cast("long").as("cluster"))
+      .select(ks ++ Seq(col("vec_id"), col("e"),
+        (-col("m.nl")).cast("long").as("cluster")): _*)
+  }
 
-  /** Element-wise mean centroid per assigned cluster, components rounded
-    * to 6 (the float-sum portability contract, same as [[labelCentroids]]).
-    * Clusters that lost all members simply vanish — the next assignment
-    * only scores surviving centroids (documented semantics; identical in
-    * any engine, no arbitrary re-seeding). */
-  private def meanCentroids(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster"), posexplode(col("e")))
-      .groupBy(col("cluster"), col("pos"))
-      .agg(avg(col("col")).as("v"))
-      .groupBy(col("cluster").as("clab"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-        s => round(s.getField("v"), 6)).as("centroid"))
+  /** Element-wise mean centroid per (keys…, assigned cluster) — the
+    * [[elementMean]] plan keyed by (keys…, cluster → clab). Clusters that
+    * lost all members simply vanish — the next assignment only scores
+    * surviving centroids (documented semantics; identical in any engine,
+    * no arbitrary re-seeding). */
+  private def meanCentroids(assigned: DataFrame,
+      keys: Seq[String] = Nil): DataFrame =
+    elementMean(assigned.select(keys.map(col) ++
+      Seq(col("cluster").as("clab"), col("e")): _*), keys :+ "clab")
+
+  /** The seed centroids `(clab, centroid)`: the k vectors `e` with the
+    * smallest md5(vec_id), numbered 1..k, components rounded to 6 — the
+    * hash-ordered, RNG-free draw. A TakeOrdered of k rows: the
+    * row_number window runs over the already-limited seed set, never a
+    * global sort of the corpus. */
+  private def hashSeeds(vecs: DataFrame, k: Int): DataFrame = {
+    val hashOrd = md5(col("vec_id").cast("string").cast("binary"))
+    vecs.orderBy(hashOrd, col("vec_id")).limit(k)
+      .select(row_number().over(Window.orderBy(hashOrd, col("vec_id")))
+        .cast("long").as("clab"),
+        transform(col("e"), x => round(x, 6)).as("centroid"))
+  }
+
+  /** The Lloyd rounds shared by [[lloydAssigned]] and [[pqAssigned]]:
+    * assign `(keys…, vec_id, e)` against the seed centroids `(keys…,
+    * clab, centroid)`, then `iters − 1` times recompute the means and
+    * reassign, each key tuple an independent quantizer. One
+    * localCheckpoint per round, whatever the number of keys. */
+  private def lloyd(vecs: DataFrame, seeds: DataFrame, keys: Seq[String],
+      iters: Int): DataFrame = {
+    require(iters >= 1 && iters <= 8, "iters must be in [1, 8]")
+    (2 to iters).foldLeft(assignTo(vecs, seeds, keys).localCheckpoint(true)) {
+      (a, _) => assignTo(a.drop("cluster"), meanCentroids(a, keys), keys)
+        .localCheckpoint(true)
+    }
+  }
 
   /** k-means (Lloyd) training of the IVF coarse quantizer, run INSIDE the
     * engine: iteration 1 assigns against the deterministic label-seeded
@@ -287,11 +329,13 @@ object Similarity {
     * rounded to 6 first (centroid components, similarities).
     *
     * Scale shape per iteration: one corpus pass for the argmax (broadcast
-    * centroids, map-side-partial max-struct), one explode+mean keyed by
+    * centroids, map-side-partial max-struct), one [[elementMean]] keyed by
     * (cluster, pos) — k·dim rows out. The per-iteration result is
     * localCheckpoint'ed (same discipline as NearDup.connectedComponents):
     * both consumers of iteration i (centroid build + reassign) read
-    * materialized blocks, and plans don't stack across iterations.
+    * materialized blocks, and plans don't stack across iterations. This
+    * is the unkeyed case of the rounds [[pqAssigned]] runs keyed by
+    * slice.
     *
     * `k` picks the centroid count: `k = 0` (default) seeds from the
     * per-`label` centroids (k = |labels|, the deterministic oracle path);
@@ -315,28 +359,12 @@ object Similarity {
     * maxPerCluster)` — k ≈ √N keeps expected cluster size ≈ √N, so with
     * the rank cap the pair pass is linear in the corpus. */
   def lloydAssigned(corpus: DataFrame, iters: Int, k: Int = 0): DataFrame = {
-    require(iters >= 1 && iters <= 8, "iters must be in [1, 8]")
-    val first =
-      if (k == 0) assignToCentroids(corpus)
-      else {
-        val vecs = corpus.select(col("vec_id"),
-          asDouble(col("embedding")).as("e"))
-        val hashOrd = md5(col("vec_id").cast("string").cast("binary"))
-        // k rows total — the row_number window runs over the already-
-        // limited seed set, not the corpus
-        val seeds = vecs.orderBy(hashOrd, col("vec_id")).limit(k)
-          .withColumn("clab", row_number()
-            .over(Window.orderBy(hashOrd, col("vec_id"))).cast("long"))
-          .select(col("clab"),
-            transform(col("e"), x => round(x, 6)).as("centroid"))
-        assignTo(vecs, seeds)
-      }
-    var assigned = first.localCheckpoint(true)
-    for (_ <- 2 to iters) {
-      assigned = assignTo(assigned.select(col("vec_id"), col("e")),
-        meanCentroids(assigned)).localCheckpoint(true)
-    }
-    assigned
+    val vecs = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    val seeds =
+      if (k == 0)
+        labelCentroids(corpus).select(col("label").as("clab"), col("centroid"))
+      else hashSeeds(vecs, k)
+    lloyd(vecs, seeds, Nil, iters)
   }
 
   /** SemDeDup stage 2: within-cluster keep-first prune over an
@@ -389,7 +417,7 @@ object Similarity {
     * k·dim floats, broadcastable at any corpus scale, and every future
     * batch assigns against these exact bits without retraining. */
   def trainedCentroids(assigned: DataFrame): DataFrame =
-    meanCentroids(assigned).select(col("clab"), col("centroid"))
+    meanCentroids(assigned)
 
   /** Nearest-centroid assignment of raw `(vec_id, embedding)` rows
     * against an EXPLICIT (frozen) centroid table `(clab, centroid)` —
@@ -567,11 +595,11 @@ object Similarity {
 
   /** Product quantization stage 1 — per-slice quantizer training: the
     * embedding is cut into `m` contiguous `sub`-wide subvectors and each
-    * slice trains its own [[lloydAssigned]] codebook (hash-seeded, fixed
-    * `iters`, k codewords — the engine's established deterministic
-    * quantizer, reused verbatim per slice). Output is the assignment
-    * table `(slice, vec_id, e, cluster)` with `e` the SUBvector — one row
-    * per (vector, slice).
+    * slice trains its own k-codeword Lloyd quantizer (hash-seeded, fixed
+    * `iters` — the [[lloydAssigned]] contract per slice: PqSpec pins
+    * every slice row for row against a [[lloydAssigned]] call on that
+    * slice alone). Output is the assignment table `(slice, vec_id, e,
+    * cluster)` with `e` the SUBvector — one row per (vector, slice).
     *
     * This is the PQ trade (Jégou et al., TPAMI 2011): m independent
     * k-codeword quantizers span k^m effective cells at the storage cost
@@ -579,57 +607,40 @@ object Similarity {
     * payload is never needed again after encoding ([[pqAdcTopK]] scores
     * against codebook entries only).
     *
-    * Scale shape: each slice's training is the [[lloydAssigned]] shape
-    * (broadcast centroids, map-side-partial argmax, k·sub-row updates);
-    * the union stacks m of them. The m chains are INDEPENDENT, and each
-    * runs `iters` eager localCheckpoint jobs — built serially they
-    * serialize m·iters small jobs through the scheduler, so the slices
-    * are submitted CONCURRENTLY (SparkSession is thread-safe for job
-    * submission; every slice's result is deterministic regardless of
-    * completion order, so the union is too). Downstream consumers read
-    * this result at least twice (codebook build + code join) — persist
-    * it (the stage-cache pattern, same as [[assignToCentroids]]). */
+    * Scale shape: the m quantizers are independent, so they train as ONE
+    * plan keyed by `slice`. Each corpus row explodes into its m (slice,
+    * vec_id, subvector) rows; the k seed vectors are picked ONCE by a
+    * single TakeOrdered before the explode (every slice holds the same
+    * vec_id set, so every slice draws the same seed rows); each Lloyd
+    * round is one broadcast equi-join on `slice` against the m·k
+    * codewords, one argmax per (slice, vec_id) and one mean keyed by
+    * (slice, cluster, pos) — `iters` localCheckpoint jobs in all,
+    * however large m is. Downstream consumers read this result at least
+    * twice (codebook build + code join) — persist it (the stage-cache
+    * pattern, same as [[assignToCentroids]]). */
   def pqAssigned(corpus: DataFrame, m: Int, sub: Int, iters: Int,
       k: Int): DataFrame = {
     require(m >= 1 && sub >= 1, "need positive slice geometry")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // a DEDICATED m-thread pool, not the shared global ExecutionContext:
-    // each slice future BLOCKS on Spark actions (eager localCheckpoint
-    // per Lloyd round), so on a shared pool m > parallelism would
-    // serialize the tail slices and a pooled caller could starve
-    // unrelated work. The pool exists only for this call.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
-    val ec = ExecutionContext.fromExecutorService(pool)
-    try {
-      val slices = (0 until m).map { j =>
-        Future {
-          lloydAssigned(
-            corpus.select(col("vec_id"),
-              slice(asDouble(col("embedding")), j * sub + 1, sub)
-                .as("embedding")),
-            iters, k)
-            .select(lit(j.toLong).as("slice"), col("vec_id"), col("e"),
-              col("cluster"))
-        }(ec)
-      }
-      slices.map(Await.result(_, Duration.Inf)).reduce(_ unionByName _)
-    } finally pool.shutdown()
+    require(k >= 1, s"pqAssigned: k (codewords per slice) must be >= 1, got $k")
+    // (id, v) rows → their m (id, slice, subvector of v) rows
+    def sliced(rows: DataFrame, id: String, v: String): DataFrame =
+      rows.select(col(id), explode(array((0 until m).map { j =>
+        struct(lit(j.toLong).as("slice"), slice(col(v), j * sub + 1, sub).as(v))
+      }: _*)).as("s")).select(col(id), col("s.*"))
+    val vecs = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    lloyd(sliced(vecs, "vec_id", "e"),
+      sliced(hashSeeds(vecs, k), "clab", "centroid"), Seq("slice"), iters)
   }
 
   /** PQ stage 2 — the codebook consistent with a [[pqAssigned]] table:
     * per (slice, code), the element-wise mean of the assigned subvectors,
     * components rounded to 6 (one further Lloyd half-step, so codes and
     * codewords are self-consistent by construction and the whole chain
-    * stays oracle-replayable). Size m·k rows — broadcastable at any
-    * corpus scale. */
+    * stays oracle-replayable) — each slice's [[trainedCentroids]], as
+    * the [[elementMean]] plan keyed by (slice, cluster → code). Size m·k
+    * rows — broadcastable at any corpus scale. */
   def pqCodebook(assigned: DataFrame): DataFrame =
-    assigned.select(col("slice"), col("cluster"), posexplode(col("e")))
-      .groupBy(col("slice"), col("cluster"), col("pos"))
-      .agg(avg(col("col")).as("v"))
-      .groupBy(col("slice"), col("cluster").as("code"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-        s => round(s.getField("v"), 6)).as("centroid"))
+    meanCentroids(assigned, Seq("slice")).withColumnRenamed("clab", "code")
 
   /** Encode vectors against a FROZEN PQ codebook — the nightly-append
     * half of a deployed quantized index: [[pqAssigned]] trains codebooks

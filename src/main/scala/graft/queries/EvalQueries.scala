@@ -834,13 +834,16 @@ object EvalQueries {
     "c_src3" -> (col("source") === "src3"))
 
   /** Per-filter frozen centroid tables `(filt, label, centroid)` over a
-    * given base corpus — one [[Similarity.labelCentroids]] per
-    * partition plus the shared `0_all` set. */
+    * given base corpus — the shared `0_all` set plus one per predicate,
+    * in ONE pass: each row is exploded into a (filt, label) key per
+    * filter it satisfies, and one [[Similarity.labelCentroids]] is keyed
+    * by that pair. */
   private def partCentroids(corpus: DataFrame): DataFrame =
-    (("0_all" -> lit(true)) +: annFilters).map { case (name, pred) =>
-      Similarity.labelCentroids(corpus.filter(pred))
-        .withColumn("filt", lit(name))
-    }.reduce(_ unionByName _)
+    Similarity.labelCentroids(corpus.select(explode(array_compact(array(
+        (("0_all" -> lit(true)) +: annFilters).map { case (name, pred) =>
+          when(pred, struct(lit(name).as("filt"), col("label")))
+        }: _*))).as("label"), col("embedding")))
+      .select(col("label.*"), col("centroid"))
 
   /** PERSISTED per-predicate quantizer artifact for q251 — trained once
     * per session on the current corpus snapshot, served frozen. */

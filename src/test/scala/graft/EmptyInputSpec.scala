@@ -106,6 +106,20 @@ class EmptyInputSpec extends SparkSpec {
     assert(qs.collect().head.getAs[Double]("scale") === 0.0)
   }
 
+  test("quantizer chain: pqAssigned, pqCodebook, pqAdcTopK, " +
+      "lloydAssigned with k > 0 and labelCentroids return zero rows on " +
+      "an empty embedding corpus") {
+    val assigned = Similarity.pqAssigned(emptyEmb, m = 2, sub = 2,
+      iters = 2, k = 4)
+    assert(assigned.count() === 0L)
+    assert(Similarity.pqCodebook(assigned).count() === 0L)
+    assert(Similarity.pqAdcTopK(emptyEmb, assigned, k = 5).count() === 0L)
+    assert(Similarity.lloydAssigned(emptyEmb, iters = 2, k = 4)
+      .count() === 0L)
+    assert(Similarity.labelCentroids(emptyEmb.withColumn("label", lit(0L)))
+      .count() === 0L)
+  }
+
   test("mixture family: temperature curve/targets and resampling are " +
       "empty on an empty corpus, not null-bearing") {
     import spark.implicits._

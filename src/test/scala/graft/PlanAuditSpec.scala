@@ -1597,6 +1597,18 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("the per-predicate quantizer stages are single keyed plans: no " +
+    "Union in the build plans of ivf_part_centroids (q251) and " +
+    "ivf_part_hist_centroids (q255)") {
+    Seq("q251_partitioned_ann" -> "ivf_part_centroids",
+      "q255_part_index_nights" -> "ivf_part_hist_centroids").foreach {
+      case (q, key) =>
+        SparkEntry.queries(q)(spark, dir)
+        val p = stageBuildPlan(key)
+        assert(!p.contains("Union"), s"$key:\n$p")
+    }
+  }
+
   test("q248: both phase waterfills and the quality pool ride persisted " +
     "stages (source_tokens / doc_source_tokens / doc_features) — zero " +
     "live scans warm; the explicit budgets are broadcast scalar rows, " +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -32,6 +33,57 @@ class PqSpec extends SparkSpec {
       .filter(col("e") =!= slice(col("full"),
         (col("slice") * sub + 1).cast("int"), lit(sub)))
     assert(bad.count() === 0L)
+  }
+
+  test("the m slice quantizers train as one plan: building pqAssigned " +
+    "at m = 8 starts no more Spark jobs than at m = 1") {
+    def jobs(slices: Int): Int =
+      jobsDuring(Similarity.pqAssigned(emb, slices, sub, iters = 2, k = 32))
+    val (one, eight) = (jobs(1), jobs(8))
+    assert(one > 0, "the eager Lloyd rounds start jobs at build time")
+    assert(eight <= one, s"m = 8 started $eight jobs, m = 1 started $one")
+  }
+
+  test("keyed training equals per-slice training: every slice of " +
+    "pqAssigned and of its codebook matches lloydAssigned and " +
+    "trainedCentroids on that slice alone, row for row") {
+    val k = 16
+    val assigned = Similarity.pqAssigned(emb, m, sub, iters = 2, k = k)
+      .persist()
+    try {
+      val cb = Similarity.pqCodebook(assigned).persist()
+      try {
+        def rows(df: DataFrame): Seq[(Long, Seq[Double], Long)] =
+          df.collect().map(r =>
+            (r.getLong(0), r.getSeq[Double](1).toSeq, r.getLong(2))).toSeq
+            .sortBy(r => (r._1, r._3))
+        def cents(df: DataFrame): Seq[(Long, Seq[Double])] =
+          df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
+            .toSeq.sortBy(_._1)
+        (0 until m).foreach { j =>
+          val alone = Similarity.lloydAssigned(
+            emb.select(col("vec_id"),
+              slice(col("embedding").cast("array<double>"), j * sub + 1, sub)
+                .as("embedding")),
+            iters = 2, k = k)
+          val keyed = assigned.filter(col("slice") === j.toLong)
+          val got = rows(keyed.select(col("vec_id"), col("e"), col("cluster")))
+          assert(got.nonEmpty, s"slice $j is empty")
+          assert(got === rows(alone.select(col("vec_id"), col("e"),
+            col("cluster"))), s"slice $j assignment")
+          assert(cents(cb.filter(col("slice") === j.toLong)
+              .select(col("code"), col("centroid"))) ===
+            cents(Similarity.trainedCentroids(alone)), s"slice $j codebook")
+        }
+      } finally { cb.unpersist(); () }
+    } finally { assigned.unpersist(); () }
+  }
+
+  test("pqAssigned with k = 0 fails with an error naming k") {
+    val e = intercept[IllegalArgumentException](
+      Similarity.pqAssigned(emb, m, sub, iters = 1, k = 0))
+    assert(e.getMessage.contains("k (codewords per slice) must be >= 1"),
+      e.getMessage)
   }
 
   test("pqCodebook is self-consistent with the codes: every (slice, code) " +

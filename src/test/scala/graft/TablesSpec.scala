@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** `Tables.load`'s schema memo: a repeated load infers nothing, the memo
@@ -14,33 +10,6 @@ import org.apache.spark.sql.types.{LongType, StructType}
 class TablesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  /** Spark jobs started while `body` runs, counted under a job group of
-    * their own. A fence job in a second group is awaited afterwards: the
-    * listener bus delivers events in order, so once the fence's start is
-    * seen every job of `body` has been seen too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val fence = s"$group-fence"
-    val groups = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "TablesSpec fence")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(fence) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(fence), "the fence job was never seen")
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def tempDir(): String =
     Files.createTempDirectory("graft-tables").toString
