@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Generates a LOCAL N× scale slice of the text/embedding tables for the
-  * scale-probe measurement (ROUND11_NOTES): `documents` and `embeddings`
+  * scale-probe ratios (`SCALEPROBE_r*.json`): `documents` and `embeddings`
   * are replicated `factor` times with deterministic per-copy
   * perturbation, everything else is left for the caller to symlink from
   * the source dir. Writes under /root/repo/tmp (never touches

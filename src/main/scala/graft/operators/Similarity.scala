@@ -63,14 +63,25 @@ object Similarity {
     * (self excluded), ranked by cosine rounded to 6 decimals with the
     * candidate id as the total tiebreak. `queries` must be small (it is
     * broadcast); the corpus streams through in one pass. */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    exactTopKBy(queries, corpus, k, Nil)
+
+  /** [[bruteForceTopK]] per distinct `keys` tuple of the corpus rows: the
+    * same one broadcast-query scan, ranked per (keys…, qid). Output:
+    * (keys…, qid, vec_id, sim, rnk); with no keys it is
+    * [[bruteForceTopK]]'s plan. */
+  private def exactTopKBy(queries: DataFrame, corpus: DataFrame, k: Int,
+      keys: Seq[String]): DataFrame = {
+    val ks = keys.map(col)
     val q = broadcast(queries.select(col("vec_id").as("qid"),
       asDouble(col("embedding")).as("qe")))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("ce"))
+    val c = corpus.select(ks ++ Seq(col("vec_id"),
+      asDouble(col("embedding")).as("ce")): _*)
     val scored = c.join(q, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("qe"), col("ce")), 6).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("sim"), col("vec_id"))
+      .select(ks ++ Seq(col("qid"), col("vec_id"),
+        round(cosine(col("qe"), col("ce")), 6).as("sim")): _*)
+    val w = Window.partitionBy(ks :+ col("qid"): _*)
+      .orderBy(desc("sim"), col("vec_id"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -139,25 +150,38 @@ object Similarity {
     * [[labelCentroids]] of the same corpus snapshot (the frozen==live
     * identity RegistryLifecycleSpec pins). */
   def ivfTopKFrozen(queries: DataFrame, corpus: DataFrame,
-      cents0: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val cents = broadcast(cents0.select(col("label"), col("centroid")))
+      cents0: DataFrame, nprobe: Int, k: Int): DataFrame =
+    ivfTopKBy(queries, corpus, cents0, nprobe, k, Nil)
+
+  /** [[ivfTopKFrozen]] per distinct `keys` tuple: each key's queries probe
+    * that key's centroids `(keys…, label, centroid)` (probe window per
+    * (keys…, qid)) and scan that key's corpus rows (list join on
+    * (keys…, label)). Output: (keys…, qid, vec_id, sim, rnk); with no
+    * keys it is [[ivfTopKFrozen]]'s plan. */
+  private[graft] def ivfTopKBy(queries: DataFrame, corpus: DataFrame,
+      cents0: DataFrame, nprobe: Int, k: Int,
+      keys: Seq[String]): DataFrame = {
+    val ks = keys.map(col)
+    val cents = broadcast(cents0.select(ks ++ Seq(col("label"),
+      col("centroid")): _*))
     val q = broadcast(queries.select(col("vec_id").as("qid"),
       asDouble(col("embedding")).as("qe")))
-    val probeW = Window.partitionBy(col("qid"))
+    val probeW = Window.partitionBy(ks :+ col("qid"): _*)
       .orderBy(desc("csim"), col("label"))
     val probes = q.crossJoin(cents)
-      .select(col("qid"), col("qe"), col("label"),
-        round(cosine(col("qe"), col("centroid")), 6).as("csim"))
+      .select(ks ++ Seq(col("qid"), col("qe"), col("label"),
+        round(cosine(col("qe"), col("centroid")), 6).as("csim")): _*)
       .withColumn("prnk", row_number().over(probeW))
       .filter(col("prnk") <= nprobe)
-      .select(col("qid"), col("qe"), col("label"))
-    val c = corpus.select(col("vec_id"), col("label"),
-      asDouble(col("embedding")).as("ce"))
-    val scored = c.join(broadcast(probes), Seq("label"))
+      .select(ks ++ Seq(col("qid"), col("qe"), col("label")): _*)
+    val c = corpus.select(ks ++ Seq(col("vec_id"), col("label"),
+      asDouble(col("embedding")).as("ce")): _*)
+    val scored = c.join(broadcast(probes), keys :+ "label")
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(cosine(col("qe"), col("ce")), 6).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(desc("sim"), col("vec_id"))
+      .select(ks ++ Seq(col("qid"), col("vec_id"),
+        round(cosine(col("qe"), col("ce")), 6).as("sim")): _*)
+    val w = Window.partitionBy(ks :+ col("qid"): _*)
+      .orderBy(desc("sim"), col("vec_id"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -1436,17 +1460,98 @@ object Similarity {
         (col("hits").cast("double") / lit(k)).as("recall"))
   }
 
-  /** Post-filter re-rank of a shared over-fetched candidate list: the
-    * candidates surviving the predicate, cut back to the top k per
-    * query — the serving path both filtered-search cards measure. */
-  private def postFilterTopK(cand: DataFrame, ids: DataFrame,
-      k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(desc("sim"), col("vec_id"))
-    cand.join(ids, Seq("vec_id"), "left_semi")
-      .withColumn("rnk", row_number().over(w))
+  /** A guarded fraction: `hits / n` rounded to 6 decimals, and 0.0 —
+    * not null, not an ANSI divide-by-zero error — when `n` is 0. Every
+    * recall and selectivity column of the filtered-search cards is this
+    * one IEEE division of exact integers. */
+  private[graft] def recallFrac(hits: Column, n: Column): Column =
+    when(n === 0, lit(0.0))
+      .otherwise(round(hits.cast("double") / n.cast("double"), 6))
+
+  /** `rows` once per name of the `tags` each row satisfies, the name in
+    * column `as`: every predicate applied in one pass. A row whose
+    * predicates are all false or null is dropped, as `filter` drops
+    * it, so the rows tagged `name` are exactly `rows.filter(pred)`. */
+  private[graft] def tagRows(rows: DataFrame, tags: Seq[(String, Column)],
+      as: String): DataFrame =
+    rows.withColumn(as, explode(array_compact(array(tags.map {
+      case (name, pred) => when(pred, lit(name))
+    }: _*))))
+
+  /** One quantizer per filter, `(filt, label, centroid)`, in one pass:
+    * the [[elementMean]] keyed by (filt, label) of the tagged corpus —
+    * [[labelCentroids]] of `corpus.filter(pred)` for every filter. */
+  private[graft] def filterCentroids(corpus: DataFrame,
+      filters: Seq[(String, Column)]): DataFrame =
+    elementMean(tagRows(corpus, filters, "filt").select(col("filt"),
+      col("label"), asDouble(col("embedding")).as("e")), Seq("filt", "label"))
+
+  /** Keyed recall counts: the exact top-k of the `tagged` corpus per
+    * (keys…, qid) is the ground truth; each approximate list
+    * `(keys…, qid, vec_id)` is left-joined onto it and its hits counted
+    * per key tuple. The counts are left-joined onto `grid` (one row per
+    * key tuple to report), so a key no tagged row reaches keeps a
+    * zeroed row. Lists and counts hold at most keys·q·k rows and are
+    * broadcast, so the only shuffles are the ranking windows and the
+    * two aggregates.
+    * @return grid's columns, then n_pass (tagged rows per key), n_exact
+    *         and one hit count per list, named after it */
+  private[graft] def keyedRecall(queries: DataFrame, tagged: DataFrame,
+      grid: DataFrame, keys: Seq[String], k: Int,
+      lists: Seq[(String, DataFrame)]): DataFrame = {
+    val on = keys ++ Seq("qid", "vec_id")
+    val exact = exactTopKBy(queries, tagged, k, keys).select(on.map(col): _*)
+    val hits = lists.foldLeft(exact) { case (acc, (name, list)) =>
+        acc.join(broadcast(list.select(on.map(col): _*)
+          .withColumn(s"__$name", lit(1L))), on, "left")
+      }
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_exact"),
+        lists.map { case (name, _) => sum(col(s"__$name")).as(name) }: _*)
+    val nPass = tagged.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_pass"))
+    grid.join(broadcast(nPass), keys, "left")
+      .join(broadcast(hits), keys, "left")
+      .select(grid.columns.map(col) ++
+        ("n_pass" +: "n_exact" +: lists.map(_._1))
+          .map(c => coalesce(col(c), lit(0L)).as(c)): _*)
+  }
+
+  /** The one plan behind [[filteredAnnRecall]] and
+    * [[filteredIndexComparison]], keyed by `filt`: the corpus is tagged
+    * once with every filter it satisfies; the exact side ranks per
+    * (filt, qid); the shared over-fetched candidate list (one probe of
+    * the whole corpus, checkpointed) is re-ranked per (filt, qid); with
+    * `partitioned`, the per-filter index probes per (filt, qid) too and
+    * its hits come out as `hits_part`. Rows come in filter-name order
+    * without a sort: the grid is one partition in that order, and every
+    * count reaches it through a broadcast join.
+    * @return (filt, n_corpus, n_pass, selectivity, n_exact, hits_post
+    *         [, hits_part]) */
+  private def filteredRecall(queries: DataFrame, corpus: DataFrame,
+      filters: Seq[(String, Column)], nprobe: Int, k: Int, overfetch: Int,
+      frozen: Option[DataFrame], partitioned: Boolean): DataFrame = {
+    require(filters.nonEmpty && overfetch >= 1 && k >= 1)
+    val tagged = tagRows(corpus, filters, "filt")
+    val cand = ivfTopKFrozen(queries, corpus,
+        frozen.fold(labelCentroids(corpus))(_.filter(col("filt") === "0_all")),
+        nprobe, k * overfetch)
+      .select(col("qid"), col("vec_id"), col("sim"))
+      .localCheckpoint(true)
+    val post = tagged.select(col("filt"), col("vec_id"))
+      .join(broadcast(cand), Seq("vec_id"))
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("filt"),
+        col("qid")).orderBy(desc("sim"), col("vec_id"))))
       .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id"))
+    val part = if (!partitioned) Nil else Seq("hits_part" ->
+      ivfTopKBy(queries, tagged, frozen.getOrElse(filterCentroids(corpus,
+        filters)), nprobe, k, Seq("filt")))
+    val grid = corpus.agg(count(lit(1)).as("n_corpus"))
+      .select(explode(array(filters.map(_._1).sorted.map(lit): _*))
+        .as("filt"), col("n_corpus"))
+    keyedRecall(queries, tagged, grid, Seq("filt"), k,
+        ("hits_post" -> post) +: part)
+      .withColumn("selectivity", recallFrac(col("n_pass"), col("n_corpus")))
   }
 
   /** ATTRIBUTE-FILTERED ANN recall card — the vector-database operator
@@ -1462,13 +1567,17 @@ object Similarity {
     * says whether k·overfetch is enough at each selectivity before
     * anyone serves filtered queries from the shared index.
     *
-    * Scale shapes: the probed candidate list is built ONCE over the
-    * full corpus (one broadcast-query IVF pass, k·overfetch rows per
-    * query) and every filter point re-ranks that LIST-sized table; the
-    * exact side pays one filtered corpus scan per filter — the
-    * evaluation cost, not the serving cost (production serves only the
-    * probe path). Counts are exact integers; selectivity and recall
-    * are single IEEE divisions.
+    * Scale shapes: one plan for every filter. The probed candidate list
+    * is built ONCE over the full corpus (one broadcast-query IVF pass,
+    * k·overfetch rows per query, checkpointed) and re-ranked per
+    * (filt, qid); the corpus is tagged with the names of the filters
+    * each row satisfies, and ONE exact scan of the tagged rows ranks
+    * per (filt, qid) — the evaluation cost, not the serving cost
+    * (production serves only the probe path). One aggregate counts
+    * every filter, left-joined onto the filter names so a filter no
+    * row satisfies keeps its zero row. Counts are exact integers;
+    * selectivity and recall are single IEEE divisions ([[recallFrac]]),
+    * 0.0 over an empty corpus or an empty ground truth.
     *
     * @param corpus  vectors with attribute columns already attached
     *                (vec_id, embedding, label, + whatever the
@@ -1479,35 +1588,12 @@ object Similarity {
     *         n_exact, hits, recall), ordered by filt */
   def filteredAnnRecall(queries: DataFrame, corpus: DataFrame,
       filters: Seq[(String, Column)], nprobe: Int, k: Int,
-      overfetch: Int): DataFrame = {
-    require(filters.nonEmpty && overfetch >= 1 && k >= 1)
-    // one unfiltered over-fetched probe pass, shared by every filter
-    val cand = ivfTopK(queries, corpus, nprobe, k * overfetch)
-      .select(col("qid"), col("vec_id"), col("sim"))
-      .localCheckpoint(true)
-    val nAll = corpus.agg(count(lit(1)).as("n_corpus"))
-    filters.sortBy(_._1).map { case (name, pred) =>
-      val sub = corpus.filter(pred)
-      val ids = sub.select(col("vec_id"))
-      val exact = bruteForceTopK(queries, sub, k)
-        .select(col("qid"), col("vec_id"))
-      val approx = postFilterTopK(cand, ids, k)
-        .withColumn("__hit", lit(1L))
-      exact.join(approx, Seq("qid", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("__hit")), lit(0L)).as("hits"))
-        .crossJoin(broadcast(nAll))
-        .crossJoin(broadcast(ids.agg(count(lit(1)).as("n_pass"))))
-        .select(lit(name).as("filt"), col("n_corpus"), col("n_pass"),
-          round(col("n_pass").cast("double") /
-            col("n_corpus").cast("double"), 6).as("selectivity"),
-          col("n_exact"), col("hits"),
-          // empty ground truth reads as recall 0, not null
-          when(col("n_exact") === 0, lit(0.0))
-            .otherwise(round(col("hits").cast("double") /
-              col("n_exact").cast("double"), 6)).as("recall"))
-    }.reduce(_ unionByName _)
-  }
+      overfetch: Int): DataFrame =
+    filteredRecall(queries, corpus, filters, nprobe, k, overfetch,
+        frozen = None, partitioned = false)
+      .select(col("filt"), col("n_corpus"), col("n_pass"),
+        col("selectivity"), col("n_exact"), col("hits_post").as("hits"),
+        recallFrac(col("hits_post"), col("n_exact")).as("recall"))
 
   /** The other half of the filtered-search trade
     * ([[filteredAnnRecall]] prices POST-filtering a shared index): when
@@ -1522,11 +1608,13 @@ object Similarity {
     * per selectivity, it answers "which predicates deserve their own
     * index partitions" before anyone ships a filtered endpoint.
     *
-    * Scale shapes: the shared probe pass is built once (checkpointed,
-    * list-sized rows); each filter point pays one filtered corpus scan
-    * for the ground truth (evaluation cost), one for the partitioned
-    * probe — at deployment the partitioned path scans only its
-    * partition, which is exactly its advantage.
+    * Scale shapes: [[filteredAnnRecall]]'s one plan plus the
+    * partitioned probe, keyed by `filt` as well: each filter's queries
+    * probe that filter's quantizer and scan only the corpus rows tagged
+    * with it (a list join on (filt, label)) — at deployment the
+    * partitioned path scans only its partition, which is exactly its
+    * advantage. Live, the per-filter quantizers are one grouped mean
+    * keyed by (filt, label) ([[filterCentroids]]).
     *
     * @param frozen optional persisted quantizer artifact
     *               `(filt, label, centroid)` — one centroid set per
@@ -1540,48 +1628,14 @@ object Similarity {
     *         n_exact, hits_post, recall_post, hits_part, recall_part) */
   def filteredIndexComparison(queries: DataFrame, corpus: DataFrame,
       filters: Seq[(String, Column)], nprobe: Int, k: Int,
-      overfetch: Int, frozen: Option[DataFrame] = None): DataFrame = {
-    require(filters.nonEmpty && overfetch >= 1 && k >= 1)
-    def probe(sub: DataFrame, filt: String, kk: Int): DataFrame =
-      frozen match {
-        case Some(f) => ivfTopKFrozen(queries, sub,
-          f.filter(col("filt") === filt), nprobe, kk)
-        case None => ivfTopK(queries, sub, nprobe, kk)
-      }
-    val cand = probe(corpus, "0_all", k * overfetch)
-      .select(col("qid"), col("vec_id"), col("sim"))
-      .localCheckpoint(true)
-    val nAll = corpus.agg(count(lit(1)).as("n_corpus"))
-    filters.sortBy(_._1).map { case (name, pred) =>
-      val sub = corpus.filter(pred)
-      val ids = sub.select(col("vec_id"))
-      val exact = bruteForceTopK(queries, sub, k)
-        .select(col("qid"), col("vec_id"))
-      val post = postFilterTopK(cand, ids, k)
-        .withColumn("__post", lit(1L))
-      val part = probe(sub, name, k)
-        .select(col("qid"), col("vec_id"), lit(1L).as("__part"))
-      exact
-        .join(post, Seq("qid", "vec_id"), "left")
-        .join(part, Seq("qid", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("__post")), lit(0L)).as("hits_post"),
-          coalesce(sum(col("__part")), lit(0L)).as("hits_part"))
-        .crossJoin(broadcast(nAll))
-        .crossJoin(broadcast(ids.agg(count(lit(1)).as("n_pass"))))
-        .select(lit(name).as("filt"), col("n_corpus"), col("n_pass"),
-          round(col("n_pass").cast("double") /
-            col("n_corpus").cast("double"), 6).as("selectivity"),
-          col("n_exact"), col("hits_post"),
-          when(col("n_exact") === 0, lit(0.0))
-            .otherwise(round(col("hits_post").cast("double") /
-              col("n_exact").cast("double"), 6)).as("recall_post"),
-          col("hits_part"),
-          when(col("n_exact") === 0, lit(0.0))
-            .otherwise(round(col("hits_part").cast("double") /
-              col("n_exact").cast("double"), 6)).as("recall_part"))
-    }.reduce(_ unionByName _)
-  }
+      overfetch: Int, frozen: Option[DataFrame] = None): DataFrame =
+    filteredRecall(queries, corpus, filters, nprobe, k, overfetch,
+        frozen, partitioned = true)
+      .select(col("filt"), col("n_corpus"), col("n_pass"),
+        col("selectivity"), col("n_exact"), col("hits_post"),
+        recallFrac(col("hits_post"), col("n_exact")).as("recall_post"),
+        col("hits_part"),
+        recallFrac(col("hits_part"), col("n_exact")).as("recall_part"))
 
   /** The DIMENSION-TRUNCATION recall curve — the Matryoshka/MRL storage
     * dial (Kusupati et al., NeurIPS 2022): recall@k of the exact dot

@@ -741,8 +741,10 @@ object EvalQueries {
     // 1/20 (source='src3') — over ONE shared over-fetched probe pass;
     // the card is the dial reading for "is k·overfetch enough at this
     // selectivity, or does this predicate need its own index", read as
-    // decay against the baseline row. Attributes ride a vec_id = doc_id
-    // equi-join of the two tables.
+    // decay against the baseline row. All four points are one plan keyed
+    // by filt: one exact scan of the corpus tagged with the filters each
+    // row satisfies, one re-rank of the shared list, one aggregate.
+    // Attributes ride a vec_id = doc_id equi-join of the two tables.
     "q245_filtered_ann" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.filteredAnnRecall(emb.filter(col("vec_id") < 8),
@@ -762,7 +764,8 @@ object EvalQueries {
     // per predicate value plus the shared 0_all set, trained once per
     // session) — zero quantizer training in the warm plan, rows
     // bit-identical to the live-training form (frozen==live identity,
-    // SearchShardSpec).
+    // SearchShardSpec). q245's one plan keyed by filt, plus one
+    // partitioned probe keyed by filt over the same tagged corpus.
     "q251_partitioned_ann" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.filteredIndexComparison(emb.filter(col("vec_id") < 8),
@@ -775,45 +778,39 @@ object EvalQueries {
     // THE PARTITIONED-INDEX LIFECYCLE NIGHTS — the q181 treatment for
     // the per-predicate index family q251 introduced: the per-partition
     // quantizers are trained ONCE on the era's history snapshot
-    // (vec_id % 4 <> 3) and FROZEN as a persisted stage; the APPEND
+    // (vec_id % 3 <> 2) and FROZEN as a persisted stage; the APPEND
     // night adds the nightly batch to each partition's lists as a pure
     // union (no retraining, the batch rows simply carry their label);
-    // the TAKEDOWN night removes the id%23 tombstones as an anti-join
-    // on the list rows (centroids untouched). Each night graded as
-    // filtered recall@10 of the frozen-artifact search over the edited
-    // lists vs the exact scan over the same survivor set — the gauge
-    // that tells an era when drift (q185's card) has eaten enough
-    // recall to justify retraining. Rides the persisted hist-trained
-    // centroid stage; per (filt, night), one filtered scan for the
-    // truth and one probed scan — never the whole corpus.
+    // the TAKEDOWN night removes the id%23 tombstones from the list rows
+    // (centroids untouched). Each night graded as filtered recall@10 of
+    // the frozen-artifact search over the edited lists vs the exact scan
+    // over the same survivor set — the gauge that tells an era when
+    // drift (q185's card) has eaten enough recall to justify retraining.
+    // One plan keyed by (filt, night): each corpus row is tagged with the
+    // filters it satisfies and the nights it is listed in (takedown only
+    // if it survives), the frozen centroids are replicated per night, and
+    // one exact scan, one probed scan and one aggregate serve every pair.
     "q255_part_index_nights" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 8)
-      val corpus = annCorpus(s, dir)
+      val nights = Seq("1_append" -> lit(true),
+        "2_takedown" -> (col("vec_id") % 23 =!= 0))
+      val nightNames = array(nights.map(n => lit(n._1)): _*)
+      val keys = Seq("filt", "night")
+      val lists = Similarity.tagRows(
+        Similarity.tagRows(annCorpus(s, dir), annFilters, "filt"),
+        nights, "night")
       val cents = ivfPartHistCentroidsStage(s, dir)
-      annFilters.sortBy(_._1).map { case (name, pred) =>
-        val sub = corpus.filter(pred)
-        val cb = cents.filter(col("filt") === name)
-        def night(tag: String, index: DataFrame): DataFrame = {
-          val exact = Similarity.bruteForceTopK(queries, index, 10)
-            .select(col("qid"), col("vec_id"))
-          val approx = Similarity.ivfTopKFrozen(queries, index, cb,
-              nprobe = 2, k = 10)
-            .select(col("qid"), col("vec_id"), lit(1L).as("__hit"))
-          exact.join(approx, Seq("qid", "vec_id"), "left")
-            .agg(count(lit(1)).as("n_exact"),
-              coalesce(sum(col("__hit")), lit(0L)).as("hits"))
-            .crossJoin(broadcast(index.agg(count(lit(1)).as("n_index"))))
-            .select(lit(name).as("filt"), lit(tag).as("night"),
-              col("n_index"), col("n_exact"), col("hits"),
-              when(col("n_exact") === 0, lit(0.0))
-                .otherwise(round(col("hits").cast("double") /
-                  col("n_exact").cast("double"), 6)).as("recall"))
-        }
-        night("1_append", sub)
-          .unionByName(night("2_takedown",
-            sub.filter(col("vec_id") % 23 =!= 0)))
-      }.reduce(_ unionByName _)
+        .withColumn("night", explode(nightNames))
+      val grid = s.range(1)
+        .select(explode(array(annFilters.map(f => lit(f._1)): _*)).as("filt"))
+        .withColumn("night", explode(nightNames))
+      Similarity.keyedRecall(queries, lists, grid, keys, 10,
+          Seq("hits" -> Similarity.ivfTopKBy(queries, lists, cents,
+            nprobe = 2, k = 10, keys)))
+        .select(col("filt"), col("night"), col("n_pass").as("n_index"),
+          col("n_exact"), col("hits"),
+          Similarity.recallFrac(col("hits"), col("n_exact")).as("recall"))
         .orderBy(col("filt"), col("night"))
     })
   )
@@ -835,15 +832,9 @@ object EvalQueries {
 
   /** Per-filter frozen centroid tables `(filt, label, centroid)` over a
     * given base corpus — the shared `0_all` set plus one per predicate,
-    * in ONE pass: each row is exploded into a (filt, label) key per
-    * filter it satisfies, and one [[Similarity.labelCentroids]] is keyed
-    * by that pair. */
+    * in ONE pass ([[Similarity.filterCentroids]]). */
   private def partCentroids(corpus: DataFrame): DataFrame =
-    Similarity.labelCentroids(corpus.select(explode(array_compact(array(
-        (("0_all" -> lit(true)) +: annFilters).map { case (name, pred) =>
-          when(pred, struct(lit(name).as("filt"), col("label")))
-        }: _*))).as("label"), col("embedding")))
-      .select(col("label.*"), col("centroid"))
+    Similarity.filterCentroids(corpus, ("0_all" -> lit(true)) +: annFilters)
 
   /** PERSISTED per-predicate quantizer artifact for q251 — trained once
     * per session on the current corpus snapshot, served frozen. */

@@ -120,6 +120,30 @@ class EmptyInputSpec extends SparkSpec {
       .count() === 0L)
   }
 
+  test("filtered-search cards on an empty corpus: filteredAnnRecall and " +
+      "filteredIndexComparison return one zeroed row per filter, " +
+      "selectivity 0.0 included") {
+    val corpus = emptyEmb.withColumn("label", lit(0))
+    val filters = Seq("all" -> lit(true), "even" -> (col("vec_id") % 2 === 0))
+    val ann = Similarity.filteredAnnRecall(corpus, corpus, filters,
+      nprobe = 1, k = 3, overfetch = 2)
+    val cmp = Similarity.filteredIndexComparison(corpus, corpus, filters,
+      nprobe = 1, k = 3, overfetch = 2)
+    Seq(ann, cmp).foreach { card =>
+      assertNoNulls(card)
+      val rows = card.collect()
+      assert(rows.map(_.getAs[String]("filt")).toSeq === Seq("all", "even"))
+      rows.foreach { r =>
+        card.columns.filter(_ != "filt").foreach { c =>
+          assert(r.getAs[Any](c) match {
+            case n: Long => n == 0L
+            case d: Double => d == 0.0
+          }, s"$c of $r")
+        }
+      }
+    }
+  }
+
   test("mixture family: temperature curve/targets and resampling are " +
       "empty on an empty corpus, not null-bearing") {
     import spark.implicits._

@@ -1609,6 +1609,15 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("the filtered-search cards are single keyed plans: no Union in " +
+    "the live plans of q245, q251 and q255") {
+    Seq("q245_filtered_ann", "q251_partitioned_ann",
+      "q255_part_index_nights").foreach { q =>
+      val p = livePlan(q)
+      assert(!p.contains("Union"), s"$q:\n$p")
+    }
+  }
+
   test("q248: both phase waterfills and the quality pool ride persisted " +
     "stages (source_tokens / doc_source_tokens / doc_features) — zero " +
     "live scans warm; the explicit budgets are broadcast scalar rows, " +

@@ -8,8 +8,8 @@ import graft.operators.NearDup
   * input): the generator must preserve the original corpus verbatim as
   * copy 0, keep per-copy token structure, and keep the copies'
   * gram vocabularies DISJOINT — that disjointness is what makes dedup
-  * structure replicate linearly, which the ROUND11_NOTES ratios lean
-  * on. Runs at factor 3 over sf0.001 (same code path as the probe's
+  * structure replicate linearly, which the `SCALEPROBE_r*.json` ratios
+  * lean on. Runs at factor 3 over sf0.001 (same code path as the probe's
   * factor-10 sf0.1 run, sized for a spec). */
 class ScaleGenSpec extends SparkSpec {
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -312,5 +313,81 @@ class SimilaritySpec extends SparkSpec {
       nprobe = 2, k = 5)
     assert(piecewise.exceptAll(onePass).isEmpty &&
       onePass.exceptAll(piecewise).isEmpty)
+  }
+
+  /** Three filter points for the keyed-plan tests, one of them
+    * satisfied by no vector. */
+  private val threeFilters = Seq("even" -> (col("vec_id") % 2 === 0),
+    "none" -> (col("vec_id") < 0), "third" -> (col("vec_id") % 3 === 0))
+
+  test("keyed equals per filter: every filter's n_pass, n_exact, " +
+      "hits_post and hits_part (live and frozen) equal counts built from " +
+      "bruteForceTopK / ivfTopK / ivfTopKFrozen on corpus.filter(p), an " +
+      "unsatisfiable filter included") {
+    val q = corpus.filter(col("vec_id") < 4)
+    val (nprobe, k, overfetch) = (2, 5, 4)
+    val art = (("0_all" -> lit(true)) +: threeFilters).map { case (n, p) =>
+      Similarity.labelCentroids(corpus.filter(p)).withColumn("filt", lit(n))
+    }.reduce(_ unionByName _).localCheckpoint(true)
+    def pairs(df: DataFrame): Set[(Long, Long)] = df.select("qid", "vec_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cand = Similarity.ivfTopK(q, corpus, nprobe, k * overfetch)
+      .select("qid", "vec_id", "sim").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val live = Similarity.filteredIndexComparison(q, corpus, threeFilters,
+      nprobe, k, overfetch).collect()
+    val frozen = Similarity.filteredIndexComparison(q, corpus, threeFilters,
+      nprobe, k, overfetch, frozen = Some(art)).collect()
+    val ann = Similarity.filteredAnnRecall(q, corpus, threeFilters,
+      nprobe, k, overfetch).collect()
+    Seq(live, frozen, ann).foreach { rows =>
+      assert(rows.map(_.getAs[String]("filt")).toSeq ===
+        threeFilters.map(_._1))
+    }
+    threeFilters.foreach { case (name, p) =>
+      val sub = corpus.filter(p)
+      val ids = sub.select("vec_id").collect().map(_.getLong(0)).toSet
+      val exact = pairs(Similarity.bruteForceTopK(q, sub, k))
+      val post = cand.filter(c => ids(c._2)).groupBy(_._1).values
+        .flatMap(_.sortBy(c => (-c._3, c._2)).take(k))
+        .map(c => (c._1, c._2)).toSet
+      val partLive = pairs(Similarity.ivfTopK(q, sub, nprobe, k))
+      val partFrozen = pairs(Similarity.ivfTopKFrozen(q, sub,
+        art.filter(col("filt") === name), nprobe, k))
+      def row(rows: Array[Row]): Row =
+        rows.find(_.getAs[String]("filt") == name).get
+      Seq(live -> partLive, frozen -> partFrozen).foreach {
+        case (rows, part) =>
+          val r = row(rows)
+          assert(r.getAs[Long]("n_pass") === ids.size.toLong, s"$name $r")
+          assert(r.getAs[Long]("n_exact") === exact.size.toLong, s"$name $r")
+          assert(r.getAs[Long]("hits_post") === (exact & post).size.toLong,
+            s"$name $r")
+          assert(r.getAs[Long]("hits_part") === (exact & part).size.toLong,
+            s"$name $r")
+      }
+      val a = row(ann)
+      assert(a.getAs[Long]("n_exact") === exact.size.toLong &&
+        a.getAs[Long]("hits") === (exact & post).size.toLong, s"$name $a")
+      if (name == "none") assert(ids.isEmpty && exact.isEmpty)
+      else assert(exact.size === 4 * k)
+    }
+  }
+
+  test("each filtered-search card is one plan over its filters: three " +
+      "filters start at most 2 more Spark jobs than one") {
+    val q = corpus.filter(col("vec_id") < 4)
+    val cards = Seq[(String, Seq[(String, Column)] => DataFrame)](
+      "filteredAnnRecall" -> (f => Similarity.filteredAnnRecall(q, corpus,
+        f, nprobe = 2, k = 5, overfetch = 4)),
+      "filteredIndexComparison" -> (f => Similarity.filteredIndexComparison(
+        q, corpus, f, nprobe = 2, k = 5, overfetch = 4)))
+    cards.foreach { case (name, card) =>
+      def jobs(n: Int): Int =
+        jobsDuring { card(threeFilters.take(n)).collect(); () }
+      val (one, three) = (jobs(1), jobs(3))
+      assert(three <= one + 2,
+        s"$name: $one jobs over 1 filter, $three over 3")
+    }
   }
 }
