@@ -627,10 +627,12 @@ object TextAnalysis {
     * partitioning.
     *
     * Scale shapes: the inputs are per-query TOP-K LISTS, so every row
-    * here is list-sized (≤ |queries|·k·|sides|), the union + groupBy
-    * shuffles at list scale never corpus scale, and a doc absent from
-    * one side simply contributes no row (no outer-join chain — the
-    * union IS the sparse sum).
+    * here is list-sized (≤ |queries|·k·|sides|): each side collapses to
+    * one rank per (qid, id), and the sides meet in one full outer join
+    * on (qid, id) — a doc absent from a side carries a null rank there
+    * and contributes nothing to the sum. Every shuffle is at list
+    * scale, never corpus scale. This is the one-constant case of
+    * [[rrfFuseBy]].
     *
     * PRECONDITION: each side must carry at most ONE row per (qid, id) —
     * the natural shape of a top-k ranking. Duplicate rank rows within a
@@ -645,35 +647,44 @@ object TextAnalysis {
     *         top `k` fused rows per query
     */
   def rrfFuse(sides: Seq[(String, org.apache.spark.sql.DataFrame)],
-      k: Int, kconst: Int = 60): org.apache.spark.sql.DataFrame = {
-    require(sides.nonEmpty && k > 0 && kconst > 0,
-      "need sides, k > 0 and kconst > 0")
+      k: Int, kconst: Int = 60): org.apache.spark.sql.DataFrame =
+    rrfFuseBy(sides, k, Seq(kconst)).drop("kconst")
+
+  /** [[rrfFuse]] at every constant of `kconsts` in one plan: the sides
+    * are joined once, each fused (qid, id) row is scored once per
+    * distinct K with `kconst` a column, and the ranking window
+    * partitions by (kconst, qid). The rows of one K equal
+    * `rrfFuse(sides, k, K)`.
+    *
+    * @return (kconst, qid, rnk, id, rrf, <name>_rnk per side) */
+  private[graft] def rrfFuseBy(
+      sides: Seq[(String, org.apache.spark.sql.DataFrame)], k: Int,
+      kconsts: Seq[Int]): org.apache.spark.sql.DataFrame = {
+    require(sides.nonEmpty && k > 0 && kconsts.nonEmpty &&
+      kconsts.forall(_ > 0), "need sides, k > 0 and kconst > 0")
     import org.apache.spark.sql.expressions.Window
-    val tagged = sides.map { case (name, df) =>
-      df.select(col("qid"), col("id"), lit(name).as("side"),
-        col("rnk").cast("long").as("in_rnk"))
-        // best-rank collapse of any duplicate (qid, id) within the side
-        // (a no-op shuffle at list size on well-formed top-k inputs)
-        .groupBy(col("qid"), col("id"), col("side"))
-        .agg(min(col("in_rnk")).as("in_rnk"))
-    }.reduce(_ unionByName _)
-    val aggCols =
-      sum(col("c")).as("rrf") +: sides.map { case (name, _) =>
-        coalesce(max(when(col("side") === name, col("in_rnk"))), lit(0L))
-          .as(s"${name}_rnk")
+    val rnks = sides.map { case (name, _) => s"${name}_rnk" }
+    // best-rank collapse of any duplicate (qid, id) within a side (a
+    // no-op shuffle at list size on well-formed top-k inputs)
+    val ranked = sides.map { case (name, df) =>
+        df.groupBy(col("qid"), col("id"))
+          .agg(min(col("rnk").cast("long")).as(s"${name}_rnk"))
       }
-    val fused = tagged
-      .withColumn("c", round(lit(1e6) /
-        (lit(kconst.toDouble) + col("in_rnk").cast("double")), 0)
-        .cast("long"))
-      .groupBy(col("qid"), col("id"))
-      .agg(aggCols.head, aggCols.tail: _*)
-    val w = Window.partitionBy(col("qid"))
+      .reduce(_.join(_, Seq("qid", "id"), "full_outer"))
+      .withColumn("kconst", explode(array(kconsts.distinct.map(lit): _*)))
+    // each contribution is round(10⁶/(K+rank)) as a long; absent adds 0
+    val rrf = rnks.map { r =>
+      coalesce(round(lit(1e6) / (col("kconst").cast("double") +
+        col(r).cast("double")), 0).cast("long"), lit(0L))
+    }.reduce(_ + _)
+    val w = Window.partitionBy(col("kconst"), col("qid"))
       .orderBy(col("rrf").desc, col("id").asc)
-    fused.withColumn("rnk", row_number().over(w).cast("long"))
+    ranked.select(Seq(col("kconst"), col("qid"), col("id"), rrf.as("rrf")) ++
+        rnks.map(r => coalesce(col(r), lit(0L)).as(r)): _*)
+      .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
-      .select(Seq(col("qid"), col("rnk"), col("id"), col("rrf")) ++
-        sides.map { case (name, _) => col(s"${name}_rnk") }: _*)
+      .select(Seq(col("kconst"), col("qid"), col("rnk"), col("id"),
+        col("rrf")) ++ rnks.map(col): _*)
   }
 
   /** Collocation mining: document-level term co-occurrence with

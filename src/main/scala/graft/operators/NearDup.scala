@@ -391,15 +391,21 @@ object NearDup {
     bandBuckets(minhashSignatures(df, idCol, textCol, k, bands * rowsPerBand,
       seed, baseHash), bands, rowsPerBand)
 
-  private def bandBuckets(sigs: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { j =>
-      struct(lit(j).as("band"),
-        concat_ws(",", transform(slice(col("sig"), j * rowsPerBand + 1, rowsPerBand),
-          v => v.cast("string"))).as("bucket"))
-    }
-    sigs.select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  private[graft] def bandBuckets(sigs: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame =
+    bandBucketsBy(sigs, lit(bands), lit(rowsPerBand), Nil)
+
+  /** [[bandBuckets]] with the geometry as columns: (keys…, id, band,
+    * bucket) rows, each signature cut into `bands` bands of `rows`
+    * values, so one pass bands every geometry its rows carry. */
+  private def bandBucketsBy(sigs: DataFrame, bands: Column, rows: Column,
+      keys: Seq[String]): DataFrame = {
+    val ks = keys.map(col)
+    sigs.select(ks ++ Seq(col("id"), col("sig"),
+        explode(sequence(lit(0), bands - 1)).as("band")): _*)
+      .select(ks ++ Seq(col("id"), col("band"),
+        concat_ws(",", transform(slice(col("sig"), col("band") * rows + 1,
+          rows), v => v.cast("string"))).as("bucket")): _*)
   }
 
   /** Candidate pairs (d1 < d2) sharing at least one LSH bucket. Single pass:
@@ -418,20 +424,28 @@ object NearDup {
     * `bands` buckets; fully-identical docs belong to
     * [[graft.operators.Dedup.exactDedupByDigest]] upstream. */
   def lshCandidates(lsh: DataFrame,
-      maxDocsPerBucket: Long = Long.MaxValue): DataFrame = {
+      maxDocsPerBucket: Long = Long.MaxValue): DataFrame =
+    lshCandidatesBy(lsh, Nil, maxDocsPerBucket)
+
+  /** [[lshCandidates]] per key tuple: buckets are (keys…, band, bucket)
+    * and the pairs (keys…, d1, d2) are distinct per key tuple. */
+  private def lshCandidatesBy(lsh: DataFrame, keys: Seq[String],
+      maxDocsPerBucket: Long): DataFrame = {
+    val ks = keys.map(col)
+    val bucketKey = ks ++ Seq(col("band"), col("bucket"))
     val pruned =
       if (maxDocsPerBucket == Long.MaxValue) lsh
       else lsh.withColumn("__n",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
+          count(lit(1)).over(Window.partitionBy(bucketKey: _*)))
         .filter(col("__n") <= maxDocsPerBucket)
         .drop("__n")
-    pruned.groupBy(col("band"), col("bucket"))
+    pruned.groupBy(bucketKey: _*)
       .agg(collect_list(col("id")).as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("d1"), col("ids"))
-      .select(col("d1"), explode(col("ids")).as("d2"))
+      .select(ks ++ Seq(explode(col("ids")).as("d1"), col("ids")): _*)
+      .select(ks ++ Seq(col("d1"), explode(col("ids")).as("d2")): _*)
       .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"))
+      .select(ks ++ Seq(col("d1"), col("d2")): _*)
       .distinct()
   }
 
@@ -448,18 +462,28 @@ object NearDup {
     * halving as bands double over one signature): a pair agreeing on a
     * wide band agrees on both its half-width sub-bands, so the
     * candidate sets form a SUPERSET CHAIN as bands grow and recall is
-    * non-decreasing (NearDupSpec pins both). Scale shape: the signature
-    * table builds ONCE (persisted stage); each geometry re-bands the
-    * k·|corpus| signature rows locally and pays one bucket self-join —
-    * the corpus text is never rescanned, and the truth join is q·pairs
-    * sized.
+    * non-decreasing (NearDupSpec pins both).
+    *
+    * Scale shape: ONE plan for every geometry over the persisted
+    * signature table, read once. Each signature row is replicated per
+    * distinct geometry and cut with the geometry as columns (band j's
+    * bucket is `slice(sig, j·rows + 1, rows)`); the bucket groups are
+    * keyed by (bands, rows_per_band, band, bucket) and the pairs are
+    * distinct per geometry. One left join onto the distinct truth pairs
+    * flags the hits, and one aggregate grouped by geometry counts
+    * candidates and hits. The configs, as given, are the grid the
+    * counts are left-joined onto, so a repeated config repeats its row
+    * and a geometry without candidates keeps a zeroed row. Each point
+    * equals [[lshCandidates]] over that geometry's [[bandBuckets]]. The
+    * corpus text is never rescanned, and the truth join is pairs sized.
     *
     * @param sigs    persisted [[minhashSignatures]] output (id, sig)
     * @param configs (bands, rowsPerBand) pairs; bands·rowsPerBand must
     *                not exceed the signature length
     * @param truth   verified true pairs (d1, d2)
-    * @return one row per config: (bands, rows_per_band, n_candidates,
-    *         n_true, hits, recall, precision) */
+    * @return one row per config, ordered by bands: (bands,
+    *         rows_per_band, n_candidates, n_true, hits, recall,
+    *         precision) */
   def lshGeometryCurve(sigs: DataFrame, configs: Seq[(Int, Int)],
       truth: DataFrame): DataFrame = {
     require(configs.nonEmpty, "need at least one geometry")
@@ -474,23 +498,32 @@ object NearDup {
         concat(lit(s"lshGeometryCurve: geometries need $need minhashes, " +
           "signature has "), size(col("sig")))))
       .filter(col("__sig_ok").isNull).drop("__sig_ok")
+    val geom = Seq("bands", "rows_per_band")
+    def geoms(cs: Seq[(Int, Int)]): Column = explode(array(cs.map {
+      case (b, r) => struct(lit(b).as("bands"), lit(r).as("rows_per_band"))
+    }: _*))
+    val banded = checked.select(col("id"), col("sig"),
+        geoms(configs.distinct).as("g")).select("id", "sig", "g.*")
+    val cand = lshCandidatesBy(bandBucketsBy(banded, col("bands"),
+      col("rows_per_band"), geom), geom, Long.MaxValue)
     val tr = truth.select(col("d1"), col("d2"))
-    val nTrue = tr.agg(count(lit(1)).as("n_true"))
-    configs.map { case (b, r) =>
-      val cand = lshCandidates(bandBuckets(checked, b, r))
-      val hits = cand.join(tr, Seq("d1", "d2"), "left_semi")
-      cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(hits.agg(count(lit(1)).as("hits"))))
-        .crossJoin(broadcast(nTrue))
-        .select(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
-          col("n_candidates"), col("n_true"), col("hits"),
-          when(col("n_true") === 0, lit(0.0))
-            .otherwise(round(col("hits").cast("double") / col("n_true"), 6))
-            .as("recall"),
-          when(col("n_candidates") === 0, lit(0.0))
-            .otherwise(round(col("hits").cast("double") /
-              col("n_candidates"), 6)).as("precision"))
-    }.reduce(_ unionByName _).orderBy(col("bands"))
+    val counts = cand
+      .join(tr.distinct().withColumn("__hit", lit(1L)), Seq("d1", "d2"),
+        "left")
+      .groupBy(geom.map(col): _*)
+      .agg(count(lit(1)).as("n_candidates"), sum(col("__hit")).as("hits"))
+    sigs.sparkSession.range(1).select(geoms(configs).as("g"))
+      .select("g.*").join(broadcast(counts), geom, "left")
+      .crossJoin(broadcast(tr.agg(count(lit(1)).as("n_true"))))
+      .select(col("bands").cast("long").as("bands"),
+        col("rows_per_band").cast("long").as("rows_per_band"),
+        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
+        col("n_true"), coalesce(col("hits"), lit(0L)).as("hits"))
+      .select(col("*"),
+        Stats.guardedRatio(col("hits"), col("n_true")).as("recall"),
+        Stats.guardedRatio(col("hits"), col("n_candidates"))
+          .as("precision"))
+      .orderBy(col("bands"))
   }
 
   /** Cross-batch incremental NEAR-dup dedup — the fingerprint-level mirror

@@ -122,9 +122,8 @@ object Packing {
         coalesce(sum(when(col("fill") > budget, 1L).otherwise(0L)),
           lit(0L)).as("n_overbudget"))
       // empty-packing guard: zero capacity reads as zero fill, not null
-      .withColumn("fill_rate", when(col("capacity") === 0, lit(0.0))
-        .otherwise(round(col("total_tokens").cast("double") /
-          col("capacity").cast("double"), 6)))
+      .withColumn("fill_rate",
+        Stats.guardedRatio(col("total_tokens"), col("capacity")))
 
   /** Takedown BLAST RADIUS over a stored packing — when a tombstone set
     * arrives, the packed training batches containing condemned docs are
@@ -163,9 +162,8 @@ object Packing {
       .select(col("n_bins"), col("n_dirty_bins"), col("n_docs_dropped"),
         col("tokens_dropped"), col("n_docs_repack"), col("tokens_repack"),
         // empty-manifest guard: no bins means nothing is dirty, not null
-        when(col("n_bins") === 0, lit(0.0))
-          .otherwise(round(col("n_dirty_bins").cast("double") /
-            col("n_bins"), 6)).as("dirty_frac"))
+        Stats.guardedRatio(col("n_dirty_bins"), col("n_bins"))
+          .as("dirty_frac"))
   }
 
   /** INCREMENTAL RE-PACK — the night that follows
@@ -404,9 +402,8 @@ object Packing {
           .otherwise(round(col("total_tokens").cast("double") /
             (col("n_bins") * budget).cast("double"), 6)).as("fill_rate"),
         col("n_docs_split"),
-        when(col("n_docs") === 0, lit(0.0))
-          .otherwise(round(col("n_docs_split").cast("double") /
-            col("n_docs").cast("double"), 6)).as("split_frac"),
+        Stats.guardedRatio(col("n_docs_split"), col("n_docs"))
+          .as("split_frac"),
         col("max_segments"))
   }
 
@@ -460,9 +457,8 @@ object Packing {
           .otherwise(0L)).as("n_close_cross"))
     counts.crossJoin(broadcast(adj)).crossJoin(broadcast(cross))
       .select(col("n_pos"), col("n_adj_same"),
-        when(col("n_pairs") === 0, lit(0.0))
-          .otherwise(round(col("n_adj_same").cast("double") /
-            col("n_pairs").cast("double"), 6)).as("adj_same_rate"),
+        Stats.guardedRatio(col("n_adj_same"), col("n_pairs"))
+          .as("adj_same_rate"),
         when(col("n_pos") < 2, lit(0.0))
           .otherwise(round(col("same_mass").cast("double") /
             (col("n_pos") * (col("n_pos") - 1L)).cast("double"), 6))

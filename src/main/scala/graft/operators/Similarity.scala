@@ -593,8 +593,7 @@ object Similarity {
         coalesce(col("n_dup"), lit(0L)).as("n_dup"))
       .withColumn("dup_rate",
         // empty-corpus guard: zero vectors means zero dup rate, not null
-        when(col("n_vecs") === 0, lit(0.0))
-          .otherwise(round(col("n_dup").cast("double") / col("n_vecs"), 6)))
+        Stats.guardedRatio(col("n_dup"), col("n_vecs")))
   }
 
   /** Exact maximum-inner-product top-k — the dot-product sibling of
@@ -890,17 +889,24 @@ object Similarity {
     * short and recall is structurally capped below 1; that is the honest
     * reading (the index was asked for k and the corpus couldn't supply
     * them). `n_exact` is carried purely as the informational denominator
-    * for anyone who wants hits / n_exact instead — it is NOT used. */
-  private def recallVsExact(exact: DataFrame, approx: DataFrame,
-      k: Int): DataFrame =
-    exact.select(col("qid"), col("vec_id"))
-      .join(approx.select(col("qid"), col("vec_id"))
-        .withColumn("__hit", lit(1L)), Seq("qid", "vec_id"), "left")
-      .groupBy(col("qid"))
+    * for anyone who wants hits / n_exact instead — it is NOT used.
+    * The approximate list holds keys·q·k rows and is broadcast, so the
+    * join is planned as a broadcast hash join rather than left to AQE to
+    * convert after a shuffle has already run. With `keys`, both lists
+    * carry them and recall is per (keys…, qid).
+    * @return (keys…, qid, n_exact, hits, recall) */
+  private def recallVsExact(exact: DataFrame, approx: DataFrame, k: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val (on, by) = (keys ++ Seq("qid", "vec_id"), (keys :+ "qid").map(col))
+    exact.select(on.map(col): _*)
+      .join(broadcast(approx.select(on.map(col): _*)
+        .withColumn("__hit", lit(1L))), on, "left")
+      .groupBy(by: _*)
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce(col("__hit"), lit(0L))).as("hits"))
-      .select(col("qid"), col("n_exact"), col("hits"),
-        (col("hits").cast("double") / lit(k)).as("recall"))
+      .select(by ++ Seq(col("n_exact"), col("hits"),
+        (col("hits").cast("double") / lit(k)).as("recall")): _*)
+  }
 
   /** Residual IVF-PQ index-quality gauge — recall@k of [[ivfPqAdcTopK]]
     * against the exact inner-product scan. At the same geometry and
@@ -987,14 +993,9 @@ object Similarity {
     val ex = exact.getOrElse(bruteForceDotTopK(queries, corpus, k))
       .select(col("qid"), col("vec_id"))
       .withColumn("np", explode(npArr))
-    ex.join(approx.select(col("np"), col("qid"), col("vec_id"))
-        .withColumn("__hit", lit(1L)), Seq("np", "qid", "vec_id"), "left")
-      .groupBy(col("np"), col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("__hit"), lit(0L))).as("hits"))
-      .select(col("np").cast("long").as("nprobe"), col("qid"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / lit(k)).as("recall"))
+    recallVsExact(ex, approx, k, Seq("np"))
+      .withColumn("np", col("np").cast("long"))
+      .withColumnRenamed("np", "nprobe")
   }
 
   /** Ranking-quality metrics of the IVF-ADC search beyond set recall —
@@ -1447,26 +1448,9 @@ object Similarity {
     * (qid, vec_id) over q·k rows. Every count is an integer; `recall` is
     * ONE IEEE division of exact integers, identical in any engine. */
   def recallAtK(queries: DataFrame, corpus: DataFrame, nprobe: Int, k: Int)
-      : DataFrame = {
-    val exact = bruteForceTopK(queries, corpus, k)
-      .select(col("qid"), col("vec_id"))
-    val approx = ivfTopK(queries, corpus, nprobe, k)
-      .select(col("qid"), col("vec_id"))
-    exact.join(approx.withColumn("__hit", lit(1L)), Seq("qid", "vec_id"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("__hit"), lit(0L))).as("hits"))
-      .select(col("qid"), col("n_exact"), col("hits"),
-        (col("hits").cast("double") / lit(k)).as("recall"))
-  }
-
-  /** A guarded fraction: `hits / n` rounded to 6 decimals, and 0.0 —
-    * not null, not an ANSI divide-by-zero error — when `n` is 0. Every
-    * recall and selectivity column of the filtered-search cards is this
-    * one IEEE division of exact integers. */
-  private[graft] def recallFrac(hits: Column, n: Column): Column =
-    when(n === 0, lit(0.0))
-      .otherwise(round(hits.cast("double") / n.cast("double"), 6))
+      : DataFrame =
+    recallVsExact(bruteForceTopK(queries, corpus, k),
+      ivfTopK(queries, corpus, nprobe, k), k)
 
   /** `rows` once per name of the `tags` each row satisfies, the name in
     * column `as`: every predicate applied in one pass. A row whose
@@ -1551,7 +1535,8 @@ object Similarity {
         .as("filt"), col("n_corpus"))
     keyedRecall(queries, tagged, grid, Seq("filt"), k,
         ("hits_post" -> post) +: part)
-      .withColumn("selectivity", recallFrac(col("n_pass"), col("n_corpus")))
+      .withColumn("selectivity",
+        Stats.guardedRatio(col("n_pass"), col("n_corpus")))
   }
 
   /** ATTRIBUTE-FILTERED ANN recall card — the vector-database operator
@@ -1576,8 +1561,9 @@ object Similarity {
     * (production serves only the probe path). One aggregate counts
     * every filter, left-joined onto the filter names so a filter no
     * row satisfies keeps its zero row. Counts are exact integers;
-    * selectivity and recall are single IEEE divisions ([[recallFrac]]),
-    * 0.0 over an empty corpus or an empty ground truth.
+    * selectivity and recall are single IEEE divisions
+    * ([[Stats.guardedRatio]]), 0.0 over an empty corpus or an empty
+    * ground truth.
     *
     * @param corpus  vectors with attribute columns already attached
     *                (vec_id, embedding, label, + whatever the
@@ -1593,7 +1579,7 @@ object Similarity {
         frozen = None, partitioned = false)
       .select(col("filt"), col("n_corpus"), col("n_pass"),
         col("selectivity"), col("n_exact"), col("hits_post").as("hits"),
-        recallFrac(col("hits_post"), col("n_exact")).as("recall"))
+        Stats.guardedRatio(col("hits_post"), col("n_exact")).as("recall"))
 
   /** The other half of the filtered-search trade
     * ([[filteredAnnRecall]] prices POST-filtering a shared index): when
@@ -1633,9 +1619,11 @@ object Similarity {
         frozen, partitioned = true)
       .select(col("filt"), col("n_corpus"), col("n_pass"),
         col("selectivity"), col("n_exact"), col("hits_post"),
-        recallFrac(col("hits_post"), col("n_exact")).as("recall_post"),
+        Stats.guardedRatio(col("hits_post"), col("n_exact"))
+          .as("recall_post"),
         col("hits_part"),
-        recallFrac(col("hits_part"), col("n_exact")).as("recall_part"))
+        Stats.guardedRatio(col("hits_part"), col("n_exact"))
+          .as("recall_part"))
 
   /** The DIMENSION-TRUNCATION recall curve — the Matryoshka/MRL storage
     * dial (Kusupati et al., NeurIPS 2022): recall@k of the exact dot
@@ -1672,13 +1660,7 @@ object Similarity {
     // row-local literal fan-out), left-joined against each width's top-k
     val exDims = ex.select(col("qid"), col("vec_id"),
         explode(array(ds.map(d => lit(d.toLong)): _*)).as("dim"))
-    exDims.join(ranked.select(col("dim"), col("qid"), col("vec_id"))
-        .withColumn("__hit", lit(1L)), Seq("dim", "qid", "vec_id"), "left")
-      .groupBy(col("dim"), col("qid"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("__hit"), lit(0L))).as("hits"))
-      .select(col("dim"), col("qid"), col("n_exact"), col("hits"),
-        (col("hits").cast("double") / lit(k)).as("recall"))
+    recallVsExact(exDims, ranked, k, Seq("dim"))
   }
 
   /** Per-corpus-vector max rounded cosine against the broadcast eval
@@ -1736,9 +1718,8 @@ object Similarity {
       .select(col("tau"), col("n_vecs"),
         coalesce(col("n_flagged"), lit(0L)).as("n_flagged"),
         // empty-corpus guard: zero vectors means zero rate, not null
-        when(col("n_vecs") === 0, lit(0.0))
-          .otherwise(round(coalesce(col("n_flagged"), lit(0L))
-            .cast("double") / col("n_vecs"), 6)).as("rate"))
+        Stats.guardedRatio(coalesce(col("n_flagged"), lit(0L)),
+          col("n_vecs")).as("rate"))
       .orderBy(col("tau"))
   }
 

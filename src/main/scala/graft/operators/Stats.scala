@@ -18,6 +18,21 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
+  /** `num / den` as one IEEE division of the two counts, rounded to 6
+    * decimals, and 0.0 — not null, not an ANSI divide-by-zero error —
+    * when `den` is 0. A null `den` gives null. Every recall, precision,
+    * rate and Jaccard column over exact integer counts is this division.
+    *
+    * Ratios that look alike but differ stay written out where they are:
+    * the shares of [[Similarity.listOccupancyDrift]] are divided before
+    * they are rounded; [[Packing.streamPackCard]]'s `fill_rate` guards
+    * `n_bins` but divides by `n_bins · budget`;
+    * [[Packing.lengthBucketCard]]'s `saved_frac` is `1 − a/b`; and a
+    * ratio guarded by `den > 0` gives 0.0, not null, on a null count. */
+  private[graft] def guardedRatio(num: Column, den: Column): Column =
+    when(den === 0, lit(0.0))
+      .otherwise(round(num.cast("double") / den.cast("double"), 6))
+
   /** Trailing-window activity features per key — for each event, the
     * count / min / max of the key's events in the half-open time window
     * (t − span, t]. The classic feature-store "activity in the last 24h"

@@ -708,10 +708,8 @@ object EvalQueries {
           count(lit(1)).as("n_docs"))
         .select(col("n_lex"), col("n_sem"), col("n_both"), col("n_docs"),
           (col("n_lex") + col("n_sem") - col("n_both")).as("n_union"),
-          when(col("n_lex") + col("n_sem") - col("n_both") === 0, lit(0.0))
-            .otherwise(round(col("n_both").cast("double") /
-              (col("n_lex") + col("n_sem") - col("n_both")).cast("double"),
-              6)).as("jaccard"))
+          Stats.guardedRatio(col("n_both"),
+            col("n_lex") + col("n_sem") - col("n_both")).as("jaccard"))
     }),
 
     // LLM eval 8 — the q82 contamination join read from the EVAL side
@@ -810,7 +808,7 @@ object EvalQueries {
             nprobe = 2, k = 10, keys)))
         .select(col("filt"), col("night"), col("n_pass").as("n_index"),
           col("n_exact"), col("hits"),
-          Similarity.recallFrac(col("hits"), col("n_exact")).as("recall"))
+          Stats.guardedRatio(col("hits"), col("n_exact")).as("recall"))
         .orderBy(col("filt"), col("night"))
     })
   )

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Quality, TextAnalysis, Validation}
-import graft.operators.{Dedup, NearDup, Sampling, Similarity, Takedown}
+import graft.operators.{Dedup, NearDup, Sampling, Similarity, Stats, Takedown}
 
 /** Wave 2 — the validation family wired to graded queries (VERDICT.md round-1
   * items 3) and the LLM-data-pipeline surface (items 4–5): exact/near dedup,
@@ -1008,7 +1008,9 @@ object PipelineQueries {
     // ONE persisted 16-hash signature table. The geometries refine each
     // other (rows halve as bands double), so the candidate sets form a
     // superset chain and recall is non-decreasing in bands
-    // (NearDupSpec pins both); the corpus text is scanned once.
+    // (NearDupSpec pins both). One plan for the three geometries: the
+    // signature table is read once and banded with the geometry as a
+    // column; the corpus text is scanned once, by the stage build.
     "q190_lsh_geometry" -> ((s, dir) => {
       val sigs = PipelineQueries.stage(s, dir, "md5_sigs")(
         NearDup.minhashSignaturesFromPostings(docPostings(s, dir),
@@ -1930,17 +1932,12 @@ object PipelineQueries {
           col("fp").cast("long").as("fp"),
           (col("n_pos") - col("tp")).cast("long").as("fn"),
           (col("n_eval") - col("n_pos") - col("fp")).cast("long").as("tn"),
-          when(col("tp") + col("fp") === 0, lit(0.0))
-            .otherwise(round(col("tp").cast("double") /
-              (col("tp") + col("fp")).cast("double"), 6)).as("precision"),
-          when(col("n_pos") === 0, lit(0.0))
-            .otherwise(round(col("tp").cast("double") /
-              col("n_pos").cast("double"), 6)).as("recall"),
-          when(col("tp") * 2 + col("fp") + (col("n_pos") - col("tp")) === 0,
-            lit(0.0))
-            .otherwise(round((col("tp") * 2).cast("double") /
-              (col("tp") * 2 + col("fp") + (col("n_pos") - col("tp")))
-                .cast("double"), 6)).as("f1"))
+          Stats.guardedRatio(col("tp"), col("tp") + col("fp"))
+            .as("precision"),
+          Stats.guardedRatio(col("tp"), col("n_pos")).as("recall"),
+          Stats.guardedRatio(col("tp") * 2,
+            col("tp") * 2 + col("fp") + (col("n_pos") - col("tp")))
+            .as("f1"))
         .orderBy(col("flag"))
     }),
 
@@ -1968,10 +1965,8 @@ object PipelineQueries {
           count(lit(1)).as("n_docs"))
         .select(col("n_dsir"), col("n_nb"), col("n_both"), col("n_docs"),
           (col("n_dsir") + col("n_nb") - col("n_both")).as("n_union"),
-          when(col("n_dsir") + col("n_nb") - col("n_both") === 0, lit(0.0))
-            .otherwise(round(col("n_both").cast("double") /
-              (col("n_dsir") + col("n_nb") - col("n_both")).cast("double"),
-              6)).as("jaccard"))
+          Stats.guardedRatio(col("n_both"),
+            col("n_dsir") + col("n_nb") - col("n_both")).as("jaccard"))
     })
   )
 

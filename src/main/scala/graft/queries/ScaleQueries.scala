@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -321,7 +322,9 @@ object ScaleQueries {
     // twin of q191's membership-FP dial): total and worst per-key
     // overcount vs the exact counts at three widths, with the
     // zero-undercount invariant riding in the output. All error columns
-    // exact integers; the corpus pays one build per width.
+    // exact integers. One plan for the three widths: each key is hashed
+    // once per depth row, then one sketch build, one broadcast probe
+    // and one aggregate are grouped by width.
     "q192_cms_width_curve" -> ((s, dir) =>
       Sketches.countMinWidthCurve(t(s, dir, "lineitem"),
         col("l_suppkey").cast("string"), widths = cmsCurveWidths, depth = 3)
@@ -332,7 +335,9 @@ object ScaleQueries {
     // nprobe/τ/LSH geometry): measured false-positive rate at three
     // filter sizes against probes DISJOINT from the build keys (every
     // pass IS a false positive). fp_rate non-increasing in bits,
-    // spec-pinned against theory; no shuffle anywhere.
+    // spec-pinned against theory. One plan for the three sizes: one
+    // broadcast table of sorted bit arrays, one row per size, and a
+    // row-local membership filter over the probes hashed once.
     "q191_bloom_curve" -> ((s, dir) => {
       val cust = t(s, dir, "customer")
       Sketches.bloomSizingCurve(
@@ -503,34 +508,33 @@ object ScaleQueries {
     }),
 
     // The q228 dial's tuning curve (every dial ships its curve): how
-    // sensitive is the fused top-10 to the RRF constant K? Both rank
-    // lists are built ONCE (term_tf-staged lexical side, one broadcast
-    // dense scan) and locally checkpointed — each K point is a
-    // re-rank of those same list-sized tables, never a corpus re-scan.
-    // Per K: the fused top-10's overlap with the K=60 baseline. The
-    // measured verdict: on near-disjoint sides (q228's finding) the
-    // fusion is essentially K-INVARIANT — K reweights rank gaps WITHIN
-    // a side, and with one side absent per doc the between-side
-    // interleave barely moves; the dial matters when the sides overlap.
+    // sensitive is the fused top-10 to the RRF constant K? ONE plan for
+    // the three K points: both rank lists (term_tf-staged lexical side,
+    // one broadcast dense scan) are read once and fused with K as a
+    // column, ranked per (kconst, qid). Per K: the fused top-10's
+    // overlap with the K=60 baseline, flagged by a window over
+    // (qid, id) inside the same plan. The measured verdict: on
+    // near-disjoint sides (q228's finding) the fusion is essentially
+    // K-INVARIANT — K reweights rank gaps WITHIN a side, and with one
+    // side absent per doc the between-side interleave barely moves; the
+    // dial matters when the sides overlap.
     "q235_rrf_k_curve" -> ((s, dir) => {
-      val lex = hybridLexList(s, dir).localCheckpoint(true)
-      val dense = hybridDenseList(s, dir).localCheckpoint(true)
-      def top10(kc: Int) = TextAnalysis.rrfFuse(
-        Seq("bm25" -> lex, "cos" -> dense), k = 10, kconst = kc)
-        .select(col("qid"), col("id"))
-      val base = top10(60)
-      Seq(20, 60, 100).map { kc =>
-        // the K=60 grid point IS the baseline — reuse its plan instead
-        // of fusing the same lists twice
-        (if (kc == 60) base else top10(kc))
-          .join(base.withColumn("hit", lit(1L)), Seq("qid", "id"), "left")
-          .agg(count(lit(1)).as("n_fused"),
-            coalesce(sum(col("hit")), lit(0L)).as("n_shared"))
-          .select(lit(kc.toLong).as("kconst"), col("n_fused"),
-            col("n_shared"),
-            round(col("n_shared").cast("double") /
-              col("n_fused").cast("double"), 6).as("overlap_frac"))
-      }.reduce(_ unionByName _).orderBy(col("kconst"))
+      val kcs = Seq(20, 60, 100)
+      val counts = TextAnalysis.rrfFuseBy(Seq("bm25" -> hybridLexList(s, dir),
+          "cos" -> hybridDenseList(s, dir)), k = 10, kcs)
+        .withColumn("hit", max(when(col("kconst") === 60, 1L))
+          .over(Window.partitionBy(col("qid"), col("id"))))
+        .groupBy(col("kconst"))
+        .agg(count(lit(1)).as("n_fused"),
+          coalesce(sum(col("hit")), lit(0L)).as("n_shared"))
+      s.range(1).select(explode(array(kcs.map(lit): _*)).as("kconst"))
+        .join(broadcast(counts), Seq("kconst"), "left")
+        .select(col("kconst").cast("long").as("kconst"),
+          coalesce(col("n_fused"), lit(0L)).as("n_fused"),
+          coalesce(col("n_shared"), lit(0L)).as("n_shared"))
+        .withColumn("overlap_frac", round(col("n_shared").cast("double") /
+          col("n_fused").cast("double"), 6))
+        .orderBy(col("kconst"))
     })
   )
 

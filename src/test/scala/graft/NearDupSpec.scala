@@ -443,4 +443,48 @@ class NearDupSpec extends SparkSpec {
       .select(col("recall"), col("precision")).collect()(0)
     assert(!row.isNullAt(0) && row.getDouble(0) === 0.0)
   }
+
+  /** Hand-made 4-hash signatures: docs 1, 2 agree on their first three
+    * hashes, docs 3, 4 on their first; no two signatures are equal. */
+  private def smallSigs = Seq(
+    (1L, Array(1L, 2L, 3L, 4L)), (2L, Array(1L, 2L, 3L, 5L)),
+    (3L, Array(9L, 9L, 9L, 9L)), (4L, Array(9L, 8L, 7L, 6L))
+  ).toDF("id", "sig")
+
+  test("lshGeometryCurve: every config row equals the one-point " +
+      "lshCandidates(bandBuckets) recount, for duplicate and " +
+      "out-of-order configs and a geometry no pair reaches") {
+    val sigs = smallSigs
+    val truth = Seq((1L, 2L), (1L, 3L)).toDF("d1", "d2")
+    // (1, 4): one band of the whole signature, and no two are equal
+    val configs = Seq((2, 2), (4, 1), (1, 4), (2, 2))
+    val curve = NearDup.lshGeometryCurve(sigs, configs, truth).collect()
+    assert(curve.map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted ===
+      configs.map { case (b, r) => (b.toLong, r.toLong) }.sorted)
+    curve.foreach { row =>
+      val (b, r) = (row.getLong(0).toInt, row.getLong(1).toInt)
+      val cand = NearDup.lshCandidates(NearDup.bandBuckets(sigs, b, r))
+      val n = cand.count()
+      val hits = cand.join(truth, Seq("d1", "d2"), "left_semi").count()
+      def frac(a: Long, d: Long) = if (d == 0L) 0.0
+        else BigDecimal(a.toDouble / d)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert((row.getLong(2), row.getLong(3), row.getLong(4),
+        row.getDouble(5), row.getDouble(6)) ===
+        ((n, 2L, hits, frac(hits, 2L), frac(hits, n))), s"($b, $r)")
+    }
+    assert(curve.filter(_.getLong(0) == 1L).head.getLong(2) === 0L)
+  }
+
+  test("lshGeometryCurve is one plan: three geometries start at most 2 " +
+      "more Spark jobs than one") {
+    val sigs = smallSigs
+    val truth = Seq((1L, 2L)).toDF("d1", "d2")
+    def jobs(n: Int): Int = jobsDuring {
+      NearDup.lshGeometryCurve(sigs, Seq((4, 1), (2, 2), (1, 4)).take(n),
+        truth).collect(); ()
+    }
+    val (one, three) = (jobs(1), jobs(3))
+    assert(three <= one + 2, s"$one jobs over 1 geometry, $three over 3")
+  }
 }

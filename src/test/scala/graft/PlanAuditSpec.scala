@@ -761,41 +761,92 @@ class PlanAuditSpec extends SparkSpec {
     assert(qe.sparkPlan.collect { case m: MapPartitionsExec => m }.isEmpty)
   }
 
-  test("q192: the CMS curve probes each width's sketch as a broadcast " +
-    "join over the key table — sketch-sized aggregates, no cartesian") {
+  /** The physical plan of `name` before AQE re-plans it. */
+  private def preAqePlan(name: String)
+      : org.apache.spark.sql.execution.SparkPlan =
+    SparkEntry.queries(name)(spark, dir).queryExecution.sparkPlan
+
+  /** The names of a join's key columns, in key order. */
+  private def keyNames(keys: Seq[org.apache.spark.sql.catalyst.expressions
+      .Expression]): Seq[String] =
+    keys.map(_.references.map(_.name).mkString(","))
+
+  test("q192: the CMS curve probes ONE broadcast sketch keyed by " +
+    "(width, d, bucket) for every width — sketch-sized aggregates, no " +
+    "cartesian") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val p = plan("q192_cms_width_curve")
     assert(!p.contains("CartesianProduct"), p)
-    // one broadcast sketch join per curve width
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 3, p)
+    val probes = preAqePlan("q192_cms_width_curve").collect {
+      case j: BroadcastHashJoinExec
+          if keyNames(j.leftKeys) == Seq("width", "d", "bucket") => j
+    }
+    assert(probes.size === 1, p)
     assert(p.contains("partial_count"), p)
   }
 
-  test("q191: the bloom curve is shuffle-free on the probe side — each " +
-    "size is one broadcast bit-array against a row-local membership " +
-    "filter, no cartesian") {
+  test("q191: the bloom curve checks every probe against ONE broadcast " +
+    "table of sorted bit arrays, one row per size, with the row-local " +
+    "membership filter — no cartesian") {
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val p = plan("q191_bloom_curve")
     assert(!p.contains("CartesianProduct"), p)
-    // one broadcast bits-array join per curve size
-    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size >= 3, p)
+    val bitsTables = preAqePlan("q191_bloom_curve").collect {
+      case j: BroadcastNestedLoopJoinExec
+          if j.children.exists(_.output.exists(_.name == "bloom_bits")) => j
+    }
+    assert(bitsTables.size === 1, p)
     assert(p.toLowerCase.contains("graft_sorted_contains") ||
       p.contains("SortedArrayContains"), p)
   }
 
-  test("q190: the geometry curve re-bands ONE persisted signature table " +
-    "per config and joins the persisted truth pairs — the corpus text " +
-    "is never rescanned, no cartesian") {
+  test("q190: the geometry curve bands every geometry from ONE read of " +
+    "the persisted signature table and joins the persisted truth pairs " +
+    "— the corpus text is never rescanned, no cartesian") {
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val p = plan("q190_lsh_geometry")
     assert(!p.contains("CartesianProduct"), p)
-    // signature stage read by each geometry + the truth-pairs stage
-    assert("InMemoryTableScan".r.findAllIn(p).size >= 4, p)
+    val sigs = PipelineQueries.stages.collectFirst {
+      case ((_, d, k), df) if d == dir && k == "md5_sigs" => df
+    }.getOrElse(fail("stage md5_sigs is not registered"))
+    val cached = spark.asInstanceOf[classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(sigs.asInstanceOf[classic.Dataset[_]])
+      .getOrElse(fail("stage md5_sigs is not cached"))
+    val live = preAqePlan("q190_lsh_geometry")
+    val builder = cached.cachedRepresentation.cacheBuilder
+    val sigReads = live.collect {
+      case m: InMemoryTableScanExec if m.relation.cacheBuilder eq builder => m
+    }
+    assert(sigReads.size === 1, p)
+    assert(stagesRead("q190_lsh_geometry").contains("pairs"), p)
     // the LIVE plan has no parquet scan at all — InMemoryTableScan is a
     // leaf, so collect() over sparkPlan sees only the main plan's scans;
     // every documents scan lives inside a cached stage's build plan
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val qe = SparkEntry.queries("q190_lsh_geometry")(spark, dir)
-      .queryExecution
-    val live = qe.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(live.isEmpty, live.mkString("\n"))
+    val scans = live.collect { case f: FileSourceScanExec => f }
+    assert(scans.isEmpty, scans.mkString("\n"))
+  }
+
+  test("the five column-keyed tuning curves are each one plan: no Union " +
+    "in the live plans of q190, q191, q192, q235 and q263") {
+    import org.apache.spark.sql.execution.UnionExec
+    Seq("q190_lsh_geometry", "q191_bloom_curve", "q192_cms_width_curve",
+        "q235_rrf_k_curve", "q263_vocab_growth").foreach { name =>
+      val unions = preAqePlan(name).collect { case u: UnionExec => u }
+      assert(unions.isEmpty, s"$name:\n${preAqePlan(name)}")
+    }
+  }
+
+  test("q152: the recall join on (qid, vec_id) is a broadcast hash join " +
+    "in the plan before AQE, not a shuffle join left to AQE to convert") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val sp = preAqePlan("q152_ann_recall")
+    val recall = sp.collect {
+      case j: BroadcastHashJoinExec
+          if keyNames(j.leftKeys) == Seq("qid", "vec_id") => j
+    }
+    assert(recall.size === 1, sp.toString)
   }
 
   test("q189: the decision card rides ONLY persisted stages — six gauge " +

@@ -153,6 +153,25 @@ class RetrievalFusionSpec extends SparkSpec {
       "measured: the graded corpus's near-disjoint sides are K-invariant"))
   }
 
+  test("rrfFuseBy: the rows of every K equal the one-constant rrfFuse, " +
+      "for duplicate and out-of-order constants") {
+    val a = Seq((1L, 100L, 1L), (1L, 200L, 8L), (1L, 300L, 2L),
+      (2L, 100L, 3L), (2L, 400L, 1L)).toDF("qid", "id", "rnk")
+    val b = Seq((1L, 100L, 20L), (1L, 200L, 8L), (1L, 500L, 1L),
+      (2L, 400L, 2L), (2L, 400L, 5L)).toDF("qid", "id", "rnk")
+    val sides = Seq("a" -> a, "b" -> b)
+    val keyed = TextAnalysis.rrfFuseBy(sides, k = 2, Seq(1000, 20, 60, 20))
+      .collect()
+    assert(keyed.map(_.getAs[Int]("kconst")).distinct.sorted.toSeq ===
+      Seq(20, 60, 1000))
+    Seq(20, 60, 1000).foreach { kc =>
+      val one = TextAnalysis.rrfFuse(sides, k = 2, kconst = kc).collect()
+        .map(_.toSeq).toSet
+      assert(keyed.filter(_.getAs[Int]("kconst") == kc)
+        .map(_.toSeq.tail).toSet === one, s"K=$kc")
+    }
+  }
+
   // --- evalContaminationSeverity ----------------------------------------------
 
   test("evalContaminationSeverity: planted shared 4-grams produce the " +

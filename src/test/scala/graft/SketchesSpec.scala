@@ -184,4 +184,75 @@ class SketchesSpec extends SparkSpec {
       assert(curve.find(_._1 == m).get._2 === direct)
     }
   }
+
+  test("countMinWidthCurve: every width row equals the one-point " +
+      "countMin + countMinEstimate recount, for duplicate and " +
+      "out-of-order widths and on an input no key reaches") {
+    val rows = (1 to 30).flatMap(k => Seq.fill(k % 7 + 1)(s"key-$k")).toDF("k")
+    def point(df: org.apache.spark.sql.DataFrame, w: Long) = {
+      val exact = df.groupBy(col("k").as("__k"))
+        .agg(count(lit(1)).as("exact_cnt"))
+      val r = Sketches.countMinEstimate(Sketches.countMin(df, col("k"), 3, w),
+          exact, col("__k"), 3, w)
+        .agg(count(lit(1)),
+          coalesce(sum(when(col("cms_est") < col("exact_cnt"), 1L)
+            .otherwise(0L)), lit(0L)),
+          coalesce(sum(col("cms_est") - col("exact_cnt")), lit(0L)),
+          coalesce(max(col("cms_est") - col("exact_cnt")), lit(0L)))
+        .head()
+      Seq(w, 3L, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+    Seq(rows, rows.filter(lit(false))).foreach { df =>
+      val curve = Sketches.countMinWidthCurve(df, col("k"),
+        Seq(64L, 8L, 1024L, 8L), depth = 3).collect()
+      assert(curve.map(_.getLong(0)).toSeq === Seq(8L, 64L, 1024L))
+      curve.foreach { r =>
+        val want = point(df, r.getLong(0))
+        assert((0 until 6).map(r.getLong) === want)
+        assert(r.getDouble(6) === (if (want(2) == 0L) 0.0
+          else BigDecimal(want(4).toDouble / want(2))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      }
+    }
+  }
+
+  test("bloomSizingCurve: every size row equals the one-point " +
+      "BloomConfig prune recount, for duplicate and out-of-order sizes " +
+      "and a size no probe passes") {
+    val build = (1 to 200).map(i => s"key-$i").toDF("k")
+    val probes = (5001 to 5500).map(i => s"abs-$i").toDF("k")
+    // 2^20 bits over 600 set bits: no probe passes all 3 (p ≈ 2e-10)
+    val curve = Sketches.bloomSizingCurve(build, probes, col("k"),
+      Seq(4096L, 256L, 1L << 20, 256L), numHashes = 3).collect()
+    assert(curve.map(_.getLong(0)).toSeq === Seq(256L, 4096L, 1L << 20))
+    curve.foreach { r =>
+      val cfg = Sketches.BloomConfig(r.getLong(0), 3)
+      val nFp = cfg.prune(probes, col("k"), cfg.bitsArray(build, col("k")))
+        .count()
+      assert((0 until 5).map(r.getLong) ===
+        Seq(r.getLong(0), 3L, 200L, 500L, nFp))
+      assert(r.getDouble(5) === BigDecimal(nFp.toDouble / 500)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    assert(curve.last.getLong(4) === 0L)
+  }
+
+  test("each sketch curve is one plan: a grid of three points starts at " +
+      "most 2 more Spark jobs than a grid of one") {
+    val rows = (1 to 300).map(i => s"key-${i % 40}").toDF("k")
+    val probes = (1 to 100).map(i => s"abs-$i").toDF("k")
+    def cms(ws: Seq[Long]) = Sketches.countMinWidthCurve(rows, col("k"),
+      ws, depth = 3)
+    def bloom(ms: Seq[Long]) = Sketches.bloomSizingCurve(rows, probes,
+      col("k"), ms, numHashes = 3)
+    Seq[(String, Seq[Long] => org.apache.spark.sql.DataFrame)](
+        "countMinWidthCurve" -> cms, "bloomSizingCurve" -> bloom)
+      .foreach { case (name, curve) =>
+        def jobs(n: Int): Int =
+          jobsDuring { curve(Seq(64L, 256L, 1024L).take(n)).collect(); () }
+        val (one, three) = (jobs(1), jobs(3))
+        assert(three <= one + 2,
+          s"$name: $one jobs over 1 point, $three over 3")
+      }
+  }
 }
